@@ -52,6 +52,8 @@ DELETE_BROADCAST_MAX = 2_000_000
 # auto-banding: at most this many hot terms get per-term band
 # predicates; beyond it the skew is pervasive and every term bands
 _HOT_TERMS_MAX = 128
+# band keys pack (member, chunk_id) as member·2^40 + chunk_id
+_BAND_ID_LIMIT = 1 << 40
 
 
 class _DeleteLookup:
@@ -126,7 +128,10 @@ def merge_level(
     deliberately sparse: readers prune on collected literal ids and
     order comparisons only, and skipping the dense-renumber window
     avoids re-shuffling every output byte a second time just because
-    one term was hot."""
+    one term was hot. The band key needs input chunk ids < 2^40, so a
+    round whose hot inputs carry such sparse ids (the output of an
+    earlier auto-banded round) merges without banding — correct, and
+    its output ids are dense again for the rounds after it."""
     t_start = time.time()
     from bleve_spark.index.segments import SegmentStore as _SS
 
@@ -236,13 +241,19 @@ def merge_level(
         # group's share crosses the threshold
         hot_rows = (
             rows.groupBy("new_seg", "field", "term")
-            .agg(F.sum("n_docs").alias("_np"))
+            .agg(F.sum("n_docs").alias("_np"),
+                 F.max("chunk_id").alias("_mc"))
             .where(F.col("_np") > hot_min)
-            .select("field", "term").distinct()
+            .groupBy("field", "term").agg(F.max("_mc").alias("_mc"))
             .limit(_HOT_TERMS_MAX + 1)
             .collect()
         )
-        if hot_rows:
+        if len(hot_rows) > _HOT_TERMS_MAX:
+            # every term bands: every input id must fit the band key
+            max_id = rows.agg(F.max("chunk_id")).collect()[0][0]
+        else:
+            max_id = max((r["_mc"] for r in hot_rows), default=0)
+        if hot_rows and max_id < _BAND_ID_LIMIT:
             band_chunks = max(1, (hot_min // 2) // chunk_docs)
             if len(hot_rows) <= _HOT_TERMS_MAX:
                 hot_pred = functools.reduce(operator.or_, [
@@ -252,14 +263,15 @@ def merge_level(
                 ])
             # else: pervasive skew — band every term
     if band_chunks:
-        # band key orders by (member, chunk) — chunk_id < 2^40 always
-        # (a segment holds < 2^40 docs), so member·2^40 never collides.
+        # band key orders by (member, chunk) — chunk_id < 2^40 (dense
+        # ids: a segment holds < 2^40 docs; auto mode checked sparse
+        # ones above), so member·2^40 never collides.
         # Explicit band_chunks renumbers output chunk ids densely
         # after the merge; auto mode keeps the sparse ordered ids
         # (see docstring) and bands only hot terms.
         banded = (
             (
-                F.col("member").cast("long") * F.lit(1 << 40)
+                F.col("member").cast("long") * F.lit(_BAND_ID_LIMIT)
                 + F.col("chunk_id").cast("long")
             )
             / F.lit(band_chunks)

@@ -48,6 +48,7 @@ from bleve_spark.index.build import IndexStats
 from bleve_spark.index.segments import PARETO_TF_CAP, SegmentStore
 from bleve_spark import config as _cfg
 from bleve_spark.search.scorer import BM25_B, BM25_K1, idf_value
+from bleve_spark.session import local_frame
 
 # candidate-span compaction: the surviving chunks' [min_doc, max_doc]
 # spans coalesce (smallest gaps first) down to MAX_INTERVALS literal
@@ -186,16 +187,6 @@ def pruned_disjunction_topk(
     in a long-lived driver don't accumulate cached blocks."""
     from bleve_spark.index.segments import decode_chunk_rows
 
-    import os as _os
-    import time as _time
-    _dbg = bool(_os.environ.get("BLEVE_SPARK_BLOCKMAX_DEBUG"))
-    _t0 = _time.time()
-
-    def _mark(label):
-        if _dbg:
-            print(f"[blockmax] {label}: "
-                  f"{_time.time() - _t0:.2f}s cumulative")
-
     spark = store.spark
     chunks = store.chunk_rows().where(
         (F.col("field") == field) & F.col("term").isin(terms)
@@ -241,7 +232,6 @@ def pruned_disjunction_topk(
             if len(_META_CACHE) >= _META_CACHE_MAX:
                 _META_CACHE.pop(next(iter(_META_CACHE)))
             _META_CACHE[cache_key] = head
-        _mark(f"metadata collect ({len(head)} rows)")
         driver_meta = len(head) <= META_COLLECT_MAX
         if driver_meta:
             df_by_term = {}
@@ -264,7 +254,6 @@ def pruned_disjunction_topk(
                 )
                 .collect()
             )
-            _mark("meta agg")
             df_by_term = {r["term"]: int(r["df"]) for r in meta_rows}
             raw_max = {r["term"]: float(r["_raw"]) for r in meta_rows}
         idfs = {
@@ -288,7 +277,8 @@ def pruned_disjunction_topk(
             empty = store.doc_table().select(*key_cols).where(
                 F.lit(False)
             ).withColumn("score", F.lit(0.0))
-            return spark.createDataFrame([], empty.schema)
+            return local_frame(
+                spark, {c: [] for c in empty.columns}, empty.schema)
         rare = min(present, key=lambda t: df_by_term[t])
         # coord-aware bound tightening: a doc can match at most the
         # PRESENT terms, so coord ≤ n_present/total and
@@ -453,8 +443,11 @@ def pruned_disjunction_topk(
             if dels is not None:
                 decoded = decoded.join(dels, "doc_num", "left_anti")
 
-        meta = spark.createDataFrame(
-            [(t, float(idfs[t]), float(idfs[t] * qn)) for t in terms],
+        meta = local_frame(
+            spark,
+            {"term": list(terms),
+             "idf": [float(idfs[t]) for t in terms],
+             "qw": [float(idfs[t] * qn) for t in terms]},
             "term string, idf double, qw double",
         )
         tf = F.sqrt(F.col("tf").cast("double"))
@@ -516,8 +509,6 @@ def pruned_disjunction_topk(
         # materialize (≤ k rows) so every cache this call created can
         # be released before returning — a lazy return would leak the
         # persisted decode across queries in a long-lived driver
-        rows = topk.collect()
-        _mark("final")
-        return spark.createDataFrame(rows, topk.schema)
+        return local_frame(spark, topk.toArrow(), topk.schema)
     finally:
         chunks.unpersist()

@@ -37,6 +37,7 @@ from bleve_spark.analysis.analyzers import get_analyzer
 from bleve_spark.index.build import IndexedTable
 from bleve_spark.search import query as Q
 from bleve_spark.search.scorer import idf_value, term_score_col, term_weight
+from bleve_spark.session import local_frame
 
 # Tuning constants live in bleve_spark.config (env-overridable +
 # config.configure()) with their scaling rationale; usage sites read
@@ -479,24 +480,23 @@ class SDisj(SNode):
         )
 
     def _compile_bulk(self, ctx, terms: list[STerm], total, min_req):
-        spark = ctx.idx.spark
         fld = terms[0].field
-        meta = []
+        meta: dict = {"term": [], "_idf": [], "_qw": []}
         for t in terms:
             idf = t._idf(ctx)
             qw = t._boost() * idf * ctx.qn if ctx.qn != 1.0 else 1.0
-            meta.append((t.term, float(idf), float(qw)))
-        mdf = F.broadcast(
-            spark.createDataFrame(
-                meta, "term string, _idf double, _qw double"
-            )
-        )
+            meta["term"].append(t.term)
+            meta["_idf"].append(float(idf))
+            meta["_qw"].append(float(qw))
+        mdf = F.broadcast(local_frame(
+            ctx.idx.spark, meta, "term string, _idf double, _qw double"
+        ))
         # the term set is driver-known here: pass it through so the
         # at-rest pruned read pushes term IN (...) into the chunk
         # scan (field-only pruning decodes the whole field)
         return _bulk_join_score(
             ctx, fld, mdf, total, min_req,
-            terms=[m[0] for m in meta],
+            terms=meta["term"],
             sum_df=sum(t.doc_freq for t in terms),
         )
 
@@ -1153,6 +1153,9 @@ class Compiler:
         pred = F.levenshtein(F.col("term"), F.lit(term)) <= d
 
         def py_pred(t, term=term, d=d):
+            # edit distance ≥ length difference: skip the O(n²) DP
+            if abs(len(t) - len(term)) > d:
+                return False
             return _levenshtein(term, t) <= d
 
         tf = self.idx.expand_terms(
@@ -1303,6 +1306,8 @@ class Compiler:
 
         def py_pred(t, term=term, d=d, px=px):
             if px and not t.startswith(px):
+                return False
+            if abs(len(t) - len(term)) > d:
                 return False
             return _levenshtein(term, t) <= d
 
@@ -1778,8 +1783,8 @@ def _levenshtein(a: str, b: str) -> int:
 _COMPOSITE = (SConj, SDisj, SDictDisj, SBool, SPhrase)
 
 
-def compile_query(idx: IndexedTable, q: Q.Query | dict) -> DataFrame:
-    """Query → DataFrame(keys..., score)."""
+def _resolve(idx: IndexedTable, q: Q.Query | dict) -> tuple[SNode, _Ctx]:
+    """Query → resolved SNode tree plus its context, root queryNorm set."""
     if isinstance(q, dict):
         q = Q.parse_query(q)
     node = Compiler(idx).resolve(q)
@@ -1787,6 +1792,23 @@ def compile_query(idx: IndexedTable, q: Q.Query | dict) -> DataFrame:
     if isinstance(node, _COMPOSITE):
         w = node.weight(ctx)
         ctx.qn = 1.0 / math.sqrt(w) if w > 0 else 1.0
+    return node, ctx
+
+
+def compile_query(idx: IndexedTable, q: Q.Query | dict) -> DataFrame:
+    """Query → DataFrame(keys..., score). On a small persisted index
+    the query is scored on the driver (search.resident) and the frame
+    is an Arrow-backed local relation of every match."""
+    from bleve_spark.search import resident
+
+    node, ctx = _resolve(idx, q)
+    hits = resident.evaluate(idx, node, ctx)
+    if hits is not None:
+        return hits.frame(idx.spark)
+    return _compile_resolved(node, ctx)
+
+
+def _compile_resolved(node: SNode, ctx: _Ctx) -> DataFrame:
     out = node.compile(ctx)
     if ctx.nested:
         # fold child-doc matches into their ROOT document, summing
@@ -1832,10 +1854,25 @@ def search_df(
 
     ``precompiled`` lets a caller that already compiled (and possibly
     persisted) the query's scored frame reuse it — e.g. to share one
-    postings scan between the page and the true-total count."""
-    scored = (
-        precompiled if precompiled is not None else compile_query(idx, q)
-    )
+    postings scan between the page and the true-total count.
+
+    A score-sorted page of a query answered on the driver
+    (search.resident) is cut there too: the result is a local frame of
+    ``from_ + size`` rows and no Spark job runs."""
+    from bleve_spark.search import resident
+
+    if precompiled is not None:
+        scored, hits = precompiled, resident.hits_of(precompiled)
+    else:
+        node, ctx = _resolve(idx, q)
+        hits = resident.evaluate(idx, node, ctx)
+        scored = None if hits is not None else _compile_resolved(node, ctx)
+    if hits is not None:
+        if (sort in (None, [], ["-_score"]) and search_after is None
+                and search_before is None):
+            return hits.frame(idx.spark, from_ + size)
+        if scored is None:
+            scored = hits.frame(idx.spark)
     sort = sort or ["-_score"]
     # normalize every entry to (kind, field, desc, missing, mode)
     # following the reference's sort-spec JSON (sort.go:52-120):
@@ -2020,22 +2057,32 @@ def search(
     (SearchRequest.IncludeLocations); ``score="none"`` skips scoring —
     hits come back in index natural order with score 0
     (search.go req.Score == "none")."""
+    from bleve_spark.search.resident import hits_of
+
     scored = compile_query(idx, q)
-    scored = scored.persist()
+    hits_r = hits_of(scored) if score != "none" else None
+    if hits_r is None:
+        scored = scored.persist()
     try:
-        agg = scored.agg(
-            F.count(F.lit(1)).alias("total"),
-            F.max("score").alias("max_score"),
-        ).collect()[0]
-        total, max_score = int(agg["total"]), agg["max_score"]
-        if score == "none":
-            max_score = 0.0
-            order = [F.col(k).asc() for k in idx.key_cols]
+        if hits_r is not None:
+            # answered on the driver: total, max and the page need no job
+            total = len(hits_r.score)
+            max_score = float(hits_r.score.max()) if total else None
+            rows = hits_r.frame(idx.spark, from_ + size).collect()
         else:
-            order = [F.col("score").desc()] + [
-                F.col(k).asc() for k in idx.key_cols
-            ]
-        rows = scored.orderBy(*order).limit(from_ + size).collect()
+            agg = scored.agg(
+                F.count(F.lit(1)).alias("total"),
+                F.max("score").alias("max_score"),
+            ).collect()[0]
+            total, max_score = int(agg["total"]), agg["max_score"]
+            if score == "none":
+                max_score = 0.0
+                order = [F.col(k).asc() for k in idx.key_cols]
+            else:
+                order = [F.col("score").desc()] + [
+                    F.col(k).asc() for k in idx.key_cols
+                ]
+            rows = scored.orderBy(*order).limit(from_ + size).collect()
         rows = rows[from_:]
         hits = [
             {

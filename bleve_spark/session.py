@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import _parse_datatype_string
 
 # Allocator settings for the Python workers (inherited via the JVM's
 # environment, so they must be set before the gateway starts). Measured
@@ -80,3 +81,20 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .getOrCreate()
     )
+
+
+def local_frame(spark: SparkSession, data, schema) -> DataFrame:
+    """A small DataFrame held in the plan itself: ``data`` (a
+    ``pyarrow.Table`` or a dict of column → values) goes to the JVM as
+    Arrow and becomes a LocalRelation. Collecting, joining or
+    broadcasting it starts no Python worker and no Spark job — unlike
+    ``createDataFrame(<list>)``, whose rows are parallelized through
+    Python workers. ``schema`` is a StructType or a DDL string; the
+    data's columns must come in its order."""
+    import pyarrow as pa
+
+    if isinstance(schema, str):
+        schema = _parse_datatype_string(schema)
+    if not isinstance(data, pa.Table):
+        data = pa.table({f.name: data[f.name] for f in schema.fields})
+    return spark.createDataFrame(data, schema)

@@ -604,3 +604,51 @@ def test_manifest_listing_single_point(spark, seg_root):
     assert len(full.manifests()) == 4
     assert len(two.manifests()) == 2
     assert two.manifest_stamp() != full.manifest_stamp()
+
+
+
+def test_merge_auto_banding_multi_round_hot_terms(
+        spark, transcripts, transcripts_pd, tmp_path):
+    """Multi-round merges (fanin < segments) under band_chunks="auto"
+    with persistently hot terms: later rounds read the earlier rounds'
+    banded chunk ids, and the result must still hold every posting
+    exactly (compared with the independent oracle) under unique chunk
+    ids per term."""
+    from bleve_spark import config as cfg
+    from tests.oracle import PyIndex
+
+    root = str(tmp_path / "multi")
+    # small chunks: hot terms span several chunks per segment
+    build_segments(transcripts, KEYS, FIELDS, root, n_segments=4,
+                   chunk_docs=4)
+    old = cfg.MERGE_BAND_MIN_POSTINGS
+    try:
+        cfg.configure(MERGE_BAND_MIN_POSTINGS=8)
+        out = merge_to_single(spark, root, fanin=2, chunk_docs=4)
+    finally:
+        cfg.configure(MERGE_BAND_MIN_POSTINGS=old)
+    merged = SegmentStore(spark, out)
+    assert len(merged.manifests()) == 1
+
+    oracle = PyIndex(
+        transcripts_pd.to_dict("records"),
+        key_fn=lambda r: (r["conv_id"], int(r["turn_idx"])),
+        fields=FIELDS,
+    )
+    want = {
+        (f, t, key, tf, tuple(ps), round(norm, 9))
+        for f, terms in oracle.postings.items()
+        for t, docs in terms.items()
+        for key, (tf, ps, norm) in docs.items()
+    }
+    got = {
+        (f, t, (k[0], int(k[1])), tf, ps, n)
+        for f, t, k, tf, ps, n in _postings_set(
+            merged.postings_df(KEYS, list(FIELDS)), KEYS)
+    }
+    assert got == want
+    dup = merged.chunk_rows().groupBy("field", "term").agg(
+        F.count(F.lit(1)).alias("n"),
+        F.countDistinct("chunk_id").alias("d"),
+    ).where(F.col("n") != F.col("d")).count()
+    assert dup == 0, "duplicate chunk ids within a term"
