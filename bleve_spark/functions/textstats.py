@@ -183,7 +183,21 @@ def _profile_batches(stops: frozenset, markers: list):
                 "lang_pred": [""] * n, "fingerprint": [""] * n,
             }
             for i, text in enumerate(texts):
-                text = text or ""
+                if text is None:
+                    # the spec's stats of a null text are null; its
+                    # least/greatest skip nulls, so quality keeps the
+                    # length (1.0), word-length (0.5) and stopword
+                    # (1.0) scores with punctuation 0.0, and
+                    # concat_ws(null) fingerprints as md5("")
+                    for c in ("n_tokens", "n_regex_tokens", "swr",
+                              "mwl", "pr"):
+                        cols[c][i] = None
+                    cols["quality"][i] = (
+                        1.0 * 0.4 + 0.5 * 0.2 + 1.0 * 0.2 + 0.0 * 0.2
+                    )
+                    cols["lang_pred"][i] = "und"
+                    cols["fingerprint"][i] = hashlib.md5(b"").hexdigest()
+                    continue
                 lowered = text.lower()
                 words = ws.split(lowered)
                 nonempty = [w for w in words if w]

@@ -102,6 +102,8 @@ class IndexedTable:
     _persisted: list = dc_field(default_factory=list)
     # driver-side dictionary cache: None = not tried, False = too big
     _dict_map: object = dc_field(default=None, repr=False)
+    # (the _dict_map it was built from, field -> FuzzyDict)
+    _fuzzy: tuple | None = dc_field(default=None, repr=False)
     # per-(field, term) memo of bounded thesaurus lookups
     _syn_cache: dict | None = dc_field(default=None, repr=False)
     # per-index override of DICT_CACHE_MAX (0 forces every dictionary
@@ -266,7 +268,7 @@ class IndexedTable:
         with_freq: bool = False,
         py_pred=None,
     ) -> list | None:
-        """Driver-side dictionary expansion for prefix/regexp/fuzzy/
+        """Driver-side dictionary expansion for prefix/wildcard/
         term-range — the analogue of bleve's FST automaton intersection
         (/root/reference/index/scorch/snapshot_index.go:242-246), served
         from the resident dictionary cache (no job). Returns ``None``
@@ -288,6 +290,26 @@ class IndexedTable:
         if with_freq:
             return items
         return [t for t, _ in items]
+
+    def fuzzy_terms(self, field_name: str, term: str, d: int,
+                    prefix: str = "") -> list | None:
+        """(term, doc_freq, edit distance) of every dictionary term of
+        ``field_name`` within Levenshtein distance ``d`` of ``term``
+        that starts with ``prefix``, sorted by term — from length
+        buckets of the resident dictionary, rebuilt whenever it is.
+        ``None`` when the dictionary is not resident (callers then
+        take the distributed :meth:`expand_terms_df` path)."""
+        from bleve_spark.index.fuzzy import FuzzyDict
+
+        cache = self._cached_dict()
+        if cache is None:
+            return None
+        if self._fuzzy is None or self._fuzzy[0] is not cache:
+            self._fuzzy = (cache, {})
+        by_field = self._fuzzy[1]
+        if field_name not in by_field:
+            by_field[field_name] = FuzzyDict(cache.get(field_name, {}))
+        return by_field[field_name].match(term, d, prefix)
 
     def expand_terms_df(self, field_name: str, predicate) -> DataFrame:
         """Distributed dictionary expansion: (term, doc_freq) rows whose

@@ -759,6 +759,233 @@ DECODED_SCHEMA_SUFFIX = (
 DECODED_SCHEMA_NO_POS = "field string, term string, doc_num long, tf int"
 
 
+def _concat_view(col) -> np.ndarray:
+    """Zero-copy view over a non-null BinaryArray's concatenated
+    bytes."""
+    off = np.frombuffer(col.buffers()[1], dtype=np.int32)
+    off = off[col.offset:col.offset + len(col) + 1].astype(np.int64)
+    val = np.frombuffer(col.buffers()[2], dtype=np.uint8)
+    return val[off[0]:off[-1]]
+
+
+def _decode_batch_fast(b, segs, counts, with_positions, with_norm):
+    """Whole-batch decode: one varint pass per blob column. Returns
+    the (doc_num, tfs, lens, pos, plen) arrays or None when a stream
+    disagrees with its metadata."""
+    nrows = b.num_rows
+    total = int(counts.sum())
+    deltas = varint_decode(_concat_view(b.column("doc_blob")))
+    if deltas.size != total:
+        return None
+    tfs = varint_decode(_concat_view(b.column("tf_blob")))
+    if tfs.size != total:
+        return None
+    starts = np.zeros(nrows, dtype=np.int64)
+    starts[1:] = np.cumsum(counts[:-1])
+    # per-row delta decode: global cumsum minus each row's start
+    # correction (first value of a row is absolute)
+    cs = np.cumsum(deltas)
+    corr = np.zeros(nrows, dtype=np.uint64)
+    nz = counts > 0
+    corr[nz] = cs[starts[nz]] - deltas[starts[nz]]
+    local = cs - np.repeat(corr, counts)
+    bases = segs.astype(np.uint64) << np.uint64(SEG_SHIFT)
+    doc_num = (local + np.repeat(bases, counts)).astype(np.int64)
+    tfs = tfs.astype(np.int64)
+    lens = None
+    if with_norm:
+        lens = varint_decode(_concat_view(b.column("len_blob")))
+        if lens.size != total:
+            return None
+        lens = lens.astype(np.int64)
+    pos_all = plen_all = None
+    if with_positions:
+        flat = varint_decode(
+            _concat_view(b.column("pos_blob"))
+        ).astype(np.int64)
+        tf_cum = np.zeros(total + 1, dtype=np.int64)
+        np.cumsum(tfs, out=tf_cum[1:])
+        row_ends = starts + counts
+        row_tfsum = tf_cum[row_ends] - tf_cum[starts]
+        stream_lens = row_tfsum + counts
+        if flat.size != int(stream_lens.sum()):
+            return None
+        stream_starts = np.zeros(nrows, dtype=np.int64)
+        stream_starts[1:] = np.cumsum(stream_lens[:-1])
+        # each doc's [len, deltas...] stream begins at its row's
+        # stream start + preceding docs' (tf+1) bytes
+        row_of = np.repeat(np.arange(nrows), counts)
+        j = np.arange(total)
+        slot = (
+            stream_starts[row_of]
+            + (tf_cum[j] - tf_cum[starts[row_of]])
+            + (j - starts[row_of])
+        )
+        if not np.array_equal(flat[slot], tfs):
+            return None
+        vals = np.delete(flat, slot)
+        dstarts = tf_cum[:-1]  # per-doc start in vals space
+        if vals.size:
+            cs2 = np.cumsum(vals)
+            seg_base = np.zeros(total, dtype=np.int64)
+            m = tfs > 0
+            seg_base[m] = cs2[dstarts[m]] - vals[dstarts[m]]
+            pos_all = cs2 - np.repeat(seg_base, tfs)
+        else:
+            pos_all = vals
+        plen_all = tfs
+    return doc_num, tfs, lens, pos_all, plen_all
+
+
+def _decode_batch_rows(b, segs, with_positions, with_norm):
+    """Per-row decode of a batch the whole-batch pass rejected:
+    (counts, doc_num, tfs, lens, pos, plen), counts taken from the
+    decoded doc streams."""
+    nrows = b.num_rows
+    dblob = b.column("doc_blob")
+    tblob = b.column("tf_blob")
+    pblob = b.column("pos_blob") if with_positions else None
+    lblob = b.column("len_blob") if with_norm else None
+    doc_parts, tf_parts, pos_parts = [], [], []
+    plen_parts, len_parts = [], []
+    counts = np.zeros(nrows, dtype=np.int64)
+    for i in range(nrows):
+        base = np.uint64(int(segs[i])) << np.uint64(SEG_SHIFT)
+        docs = delta_decode_sorted(dblob[i].as_py())
+        nd = docs.size
+        counts[i] = nd
+        if not nd:
+            continue
+        doc_parts.append((docs + base).astype(np.int64))
+        tfs = varint_decode(tblob[i].as_py()).astype(np.int64)
+        tf_parts.append(tfs)
+        if with_norm:
+            len_parts.append(
+                varint_decode(lblob[i].as_py()).astype(np.int64)
+            )
+        if not with_positions:
+            continue
+        flat = varint_decode(pblob[i].as_py()).astype(np.int64)
+        # the per-doc streams are [len, deltas...] with len == tf on
+        # every write path — locate the length slots from the tfs and
+        # verify; fall back to the sequential parse if a foreign
+        # stream disagrees
+        slot = np.zeros(nd, dtype=np.int64)
+        slot[1:] = np.cumsum(tfs[:-1] + 1)
+        if flat.size == int(tfs.sum()) + nd and (
+            np.array_equal(flat[slot], tfs)
+        ):
+            vals = np.delete(flat, slot)
+            if vals.size:
+                # segmented cumsum: positions are per-doc deltas —
+                # global cumsum minus each doc's start offset
+                cs = np.cumsum(vals)
+                starts = np.zeros(nd, dtype=np.int64)
+                starts[1:] = np.cumsum(tfs[:-1])
+                seg_base = cs[starts] - vals[starts]
+                pos_parts.append(cs - np.repeat(seg_base, tfs))
+            else:
+                pos_parts.append(vals)
+            plen_parts.append(tfs)
+        else:
+            plists = decode_positions(pblob[i].as_py(), nd)
+            pos_parts.append(
+                np.concatenate([p.astype(np.int64) for p in plists])
+                if plists else np.empty(0, dtype=np.int64)
+            )
+            # tf stays the tf_blob value; list offsets follow the
+            # STREAM's per-doc counts
+            plen_parts.append(
+                np.array([p.size for p in plists], dtype=np.int64)
+                if plists else np.zeros(nd, dtype=np.int64)
+            )
+
+    def cat(parts, on=True):
+        if not on:
+            return None
+        return (np.concatenate(parts) if parts
+                else np.empty(0, dtype=np.int64))
+
+    return (counts, cat(doc_parts), cat(tf_parts),
+            cat(len_parts, with_norm), cat(pos_parts, with_positions),
+            cat(plen_parts, with_positions))
+
+
+def decode_chunk_batch(b, with_positions: bool = True,
+                       with_norm: bool = False):
+    """One Arrow batch of chunk rows (segment_id, n_docs, doc_blob,
+    tf_blob[, pos_blob][, len_blob]) → flat numpy postings
+    ``(counts, doc_num, tf, lens, pos, plen)``: chunk row ``i`` owns
+    ``counts[i]`` consecutive postings; ``lens`` (field token count per
+    posting) is None unless ``with_norm``; ``pos`` (flat positions) and
+    ``plen`` (positions per posting) are None unless
+    ``with_positions``. All int64.
+
+    The one decoder of the store: the ``mapInArrow`` stage of
+    :func:`decode_chunk_rows` and the driver reader
+    :meth:`SegmentStore.read_live_postings` both call it. The hot path
+    is pure numpy: each blob column's bytes are decoded as ONE
+    concatenated LEB128 stream (valid because LEB128 streams are
+    self-delimiting, and the n_docs column gives every row's value
+    count), doc deltas via cumsum, position streams via a segmented
+    cumsum keyed off the tf vector (every write path emits per-doc
+    streams as [len, deltas...] with len == tf). A batch whose streams
+    fail validation (foreign data) falls back to the per-row parser,
+    which reads a disagreeing position stream sequentially."""
+    segs = b.column("segment_id").to_numpy(zero_copy_only=False)
+    counts = b.column("n_docs").to_numpy(
+        zero_copy_only=False).astype(np.int64)
+    try:
+        fast = _decode_batch_fast(b, segs, counts, with_positions,
+                                  with_norm)
+    except (ValueError, IndexError, TypeError, AttributeError):
+        # null/absent blob buffers (foreign or legacy data) raise
+        # TypeError from np.frombuffer / AttributeError from a None
+        # buffer — fall back to the per-row parser
+        fast = None
+    if fast is not None:
+        return (counts, *fast)
+    return _decode_batch_rows(b, segs, with_positions, with_norm)
+
+
+def _postings_batch(b, counts, doc_num, tfs, lens, pos, plen,
+                    with_chunk: bool = False):
+    """Decoded arrays of chunk-row batch ``b`` → one RecordBatch of
+    postings (field, term, doc_num, tf[, norm][, positions]), led by
+    (segment_id, chunk_id) when ``with_chunk``."""
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    idx_rep = pa.array(np.repeat(np.arange(b.num_rows), counts))
+    arrays = [
+        pc.take(b.column("field"), idx_rep),
+        pc.take(b.column("term"), idx_rep),
+        pa.array(doc_num),
+        pa.array(tfs.astype(np.int32)),
+    ]
+    names = ["field", "term", "doc_num", "tf"]
+    if with_chunk:
+        arrays = [
+            pc.take(b.column("segment_id"), idx_rep),
+            pc.take(b.column("chunk_id"), idx_rep),
+        ] + arrays
+        names = ["segment_id", "chunk_id"] + names
+    if lens is not None:
+        # float32 1/sqrt(len); a zero count has no norm (null)
+        norms = np.zeros(lens.size, dtype=np.float32)
+        ok = lens > 0
+        norms[ok] = (1.0 / np.sqrt(lens[ok])).astype(np.float32)
+        arrays.append(pa.array(norms, mask=~ok))
+        names.append("norm")
+    if pos is not None:
+        offsets = np.concatenate(([0], np.cumsum(plen))).astype(np.int32)
+        arrays.append(pa.ListArray.from_arrays(
+            pa.array(offsets), pa.array(pos.astype(np.int32)),
+        ))
+        names.append("positions")
+    return pa.RecordBatch.from_arrays(arrays, names=names)
+
+
 def decode_chunk_rows(rows: DataFrame,
                       with_positions: bool = True,
                       with_norm: bool = False,
@@ -782,17 +1009,8 @@ def decode_chunk_rows(rows: DataFrame,
     whose manifests carry ``posting_lens`` (see
     SegmentStore.has_posting_lens).
 
-    The hot path is pure numpy: doc deltas via cumsum, position
-    streams via a segmented cumsum keyed off the tf vector (every
-    write path emits per-doc streams as [len, deltas...] with
-    len == tf; a stream that disagrees falls back to the sequential
-    parser). No per-posting Python objects are ever built — and no
-    PER-ROW ones either: each blob column's bytes are decoded as ONE
-    concatenated LEB128 stream per Arrow batch (valid because LEB128
-    streams are self-delimiting, and the n_docs column gives every
-    row's value count), so kernel cost is O(batch) numpy calls, not
-    O(chunk-rows). A batch whose streams fail validation (foreign
-    data) falls back to the per-row loop.
+    Each Arrow batch goes through :func:`decode_chunk_batch`: O(batch)
+    numpy calls, no per-posting (or per-row) Python objects.
 
     ``with_chunk=True`` carries (segment_id, chunk_id) through to the
     output rows, letting a caller that decoded a SUPERSET of chunks
@@ -821,241 +1039,17 @@ def decode_chunk_rows(rows: DataFrame,
 
     def dec(batches):
         import pyarrow as pa
-        import pyarrow.compute as pc
 
         pa.set_cpu_count(1)
-
-        def concat_view(col):
-            """Zero-copy (values, row-relative offsets) view over a
-            non-null BinaryArray's concatenated bytes."""
-            off = np.frombuffer(col.buffers()[1], dtype=np.int32)
-            off = off[col.offset:col.offset + len(col) + 1].astype(
-                np.int64
-            )
-            val = np.frombuffer(col.buffers()[2], dtype=np.uint8)
-            return val[off[0]:off[-1]]
-
-        def batch_fast(b, nrows, segs, counts):
-            """Whole-batch decode: one varint pass per blob column.
-            Returns the (doc_num, tfs, lens, pos, plen) arrays or
-            None when a stream disagrees with its metadata."""
-            total = int(counts.sum())
-            deltas = varint_decode(concat_view(b.column("doc_blob")))
-            if deltas.size != total:
-                return None
-            tfs = varint_decode(concat_view(b.column("tf_blob")))
-            if tfs.size != total:
-                return None
-            starts = np.zeros(nrows, dtype=np.int64)
-            starts[1:] = np.cumsum(counts[:-1])
-            # per-row delta decode: global cumsum minus each row's
-            # start correction (first value of a row is absolute)
-            cs = np.cumsum(deltas)
-            corr = np.zeros(nrows, dtype=np.uint64)
-            nz = counts > 0
-            corr[nz] = cs[starts[nz]] - deltas[starts[nz]]
-            local = cs - np.repeat(corr, counts)
-            bases = segs.astype(np.uint64) << np.uint64(SEG_SHIFT)
-            doc_num = (local + np.repeat(bases, counts)).astype(
-                np.int64
-            )
-            tfs = tfs.astype(np.int64)
-            lens = None
-            if with_norm:
-                lens = varint_decode(
-                    concat_view(b.column("len_blob"))
-                )
-                if lens.size != total:
-                    return None
-                lens = lens.astype(np.int64)
-            pos_all = plen_all = None
-            if with_positions:
-                flat = varint_decode(
-                    concat_view(b.column("pos_blob"))
-                ).astype(np.int64)
-                tf_cum = np.zeros(total + 1, dtype=np.int64)
-                np.cumsum(tfs, out=tf_cum[1:])
-                row_ends = starts + counts
-                row_tfsum = tf_cum[row_ends] - tf_cum[starts]
-                stream_lens = row_tfsum + counts
-                if flat.size != int(stream_lens.sum()):
-                    return None
-                stream_starts = np.zeros(nrows, dtype=np.int64)
-                stream_starts[1:] = np.cumsum(stream_lens[:-1])
-                # each doc's [len, deltas...] stream begins at its
-                # row's stream start + preceding docs' (tf+1) bytes
-                row_of = np.repeat(np.arange(nrows), counts)
-                j = np.arange(total)
-                slot = (
-                    stream_starts[row_of]
-                    + (tf_cum[j] - tf_cum[starts[row_of]])
-                    + (j - starts[row_of])
-                )
-                if not np.array_equal(flat[slot], tfs):
-                    return None
-                vals = np.delete(flat, slot)
-                dstarts = tf_cum[:-1]  # per-doc start in vals space
-                if vals.size:
-                    cs2 = np.cumsum(vals)
-                    seg_base = np.zeros(total, dtype=np.int64)
-                    m = tfs > 0
-                    seg_base[m] = (
-                        cs2[dstarts[m]] - vals[dstarts[m]]
-                    )
-                    pos_all = cs2 - np.repeat(seg_base, tfs)
-                else:
-                    pos_all = vals
-                plen_all = tfs
-            return doc_num, tfs, lens, pos_all, plen_all
-
         for b in batches:
-            nrows = b.num_rows
-            if not nrows:
+            if not b.num_rows:
                 continue
-            segs = b.column("segment_id").to_numpy(
-                zero_copy_only=False
-            )
-            counts = b.column("n_docs").to_numpy(
-                zero_copy_only=False
-            ).astype(np.int64)
-            fast = None
-            try:
-                fast = batch_fast(b, nrows, segs, counts)
-            except (ValueError, IndexError, TypeError, AttributeError):
-                # null/absent blob buffers (foreign or legacy data)
-                # raise TypeError from np.frombuffer / AttributeError
-                # from a None buffer — fall back to the per-row parser
-                fast = None
-            if fast is not None:
-                doc_num, tfs_all, lens_all, pos_all, plen_all = fast
-                yield _emit(
-                    pa, pc, b, nrows, counts, doc_num, tfs_all,
-                    lens_all, pos_all, plen_all,
-                )
+            counts, doc_num, tfs, lens, pos, plen = decode_chunk_batch(
+                b, with_positions, with_norm)
+            if not doc_num.size:
                 continue
-            dblob = b.column("doc_blob")
-            tblob = b.column("tf_blob")
-            pblob = b.column("pos_blob") if with_positions else None
-            lblob = b.column("len_blob") if with_norm else None
-            doc_parts, tf_parts, pos_parts = [], [], []
-            plen_parts, len_parts = [], []
-            counts = np.empty(nrows, dtype=np.int64)
-            for i in range(nrows):
-                base = np.uint64(int(segs[i])) << np.uint64(
-                    SEG_SHIFT
-                )
-                docs = delta_decode_sorted(dblob[i].as_py())
-                nd = docs.size
-                counts[i] = nd
-                if not nd:
-                    continue
-                doc_parts.append(
-                    (docs + base).astype(np.int64)
-                )
-                tfs = varint_decode(tblob[i].as_py()).astype(
-                    np.int64
-                )
-                tf_parts.append(tfs)
-                if with_norm:
-                    len_parts.append(
-                        varint_decode(lblob[i].as_py()).astype(
-                            np.int64
-                        )
-                    )
-                if not with_positions:
-                    continue
-                flat = varint_decode(pblob[i].as_py()).astype(
-                    np.int64
-                )
-                # the per-doc streams are [len, deltas...] with
-                # len == tf on every write path — locate the
-                # length slots from the tfs and verify; fall back
-                # to the sequential parse if a foreign stream
-                # disagrees
-                slot = np.zeros(nd, dtype=np.int64)
-                slot[1:] = np.cumsum(tfs[:-1] + 1)
-                if flat.size == int(tfs.sum()) + nd and (
-                    np.array_equal(flat[slot], tfs)
-                ):
-                    vals = np.delete(flat, slot)
-                    if vals.size:
-                        # segmented cumsum: positions are per-doc
-                        # deltas — global cumsum minus each doc's
-                        # start offset
-                        cs = np.cumsum(vals)
-                        starts = np.zeros(nd, dtype=np.int64)
-                        starts[1:] = np.cumsum(tfs[:-1])
-                        seg_base = cs[starts] - vals[starts]
-                        pos_parts.append(
-                            cs - np.repeat(seg_base, tfs)
-                        )
-                    else:
-                        pos_parts.append(vals)
-                    plen_parts.append(tfs)
-                else:
-                    plists = decode_positions(
-                        pblob[i].as_py(), nd
-                    )
-                    pos_parts.append(
-                        np.concatenate(
-                            [p.astype(np.int64) for p in plists]
-                        )
-                        if plists else
-                        np.empty(0, dtype=np.int64)
-                    )
-                    # tf stays the tf_blob value; list offsets
-                    # follow the STREAM's per-doc counts
-                    plen_parts.append(np.array(
-                        [p.size for p in plists], dtype=np.int64
-                    ) if plists else np.zeros(nd, dtype=np.int64))
-            if not doc_parts:
-                continue
-            yield _emit(
-                pa, pc, b, nrows, counts,
-                np.concatenate(doc_parts),
-                np.concatenate(tf_parts),
-                np.concatenate(len_parts) if with_norm else None,
-                (np.concatenate(pos_parts)
-                 if pos_parts else np.empty(0, dtype=np.int64))
-                if with_positions else None,
-                np.concatenate(plen_parts)
-                if with_positions else None,
-            )
-
-    def _emit(pa, pc, b, nrows, counts, doc_num, tfs_all,
-              lens_all, pos_all, plen_all):
-        idx_rep = pa.array(np.repeat(np.arange(nrows), counts))
-        arrays = [
-            pc.take(b.column("field"), idx_rep),
-            pc.take(b.column("term"), idx_rep),
-            pa.array(doc_num),
-            pa.array(tfs_all.astype(np.int32)),
-        ]
-        names = ["field", "term", "doc_num", "tf"]
-        if with_chunk:
-            arrays = [
-                pc.take(b.column("segment_id"), idx_rep),
-                pc.take(b.column("chunk_id"), idx_rep),
-            ] + arrays
-            names = ["segment_id", "chunk_id"] + names
-        if with_norm:
-            norms = np.zeros(lens_all.size, dtype=np.float32)
-            pos_mask = lens_all > 0
-            norms[pos_mask] = (
-                1.0 / np.sqrt(lens_all[pos_mask])
-            ).astype(np.float32)
-            arrays.append(pa.array(norms, mask=~pos_mask))
-            names.append("norm")
-        if with_positions:
-            offsets = np.concatenate(
-                ([0], np.cumsum(plen_all))
-            ).astype(np.int32)
-            arrays.append(pa.ListArray.from_arrays(
-                pa.array(offsets),
-                pa.array(pos_all.astype(np.int32)),
-            ))
-            names.append("positions")
-        return pa.RecordBatch.from_arrays(arrays, names=names)
+            yield _postings_batch(b, counts, doc_num, tfs, lens, pos,
+                                  plen, with_chunk)
 
     schema = "field string, term string, doc_num long, tf int"
     if with_chunk:
@@ -1069,6 +1063,9 @@ def decode_chunk_rows(rows: DataFrame,
 
 class SegmentStore:
     """Read side of the at-rest index."""
+
+    # segment ids this store serves; None = every manifest's segment
+    _segs: set | None = None
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -1164,14 +1161,20 @@ class SegmentStore:
     def _del_dir(self) -> str:
         return os.path.join(self.root, "deletions")
 
+    def deletion_files(self) -> list[str]:
+        """Paths of the delete files this store applies, sorted."""
+        d = self._del_dir()
+        if not os.path.isdir(d):
+            return []
+        return [os.path.join(d, f) for f in sorted(os.listdir(d))
+                if f.endswith(".parquet")]
+
     def deletions(self) -> DataFrame | None:
         """(doc_num long) of deleted docs, or None when there are none."""
-        d = self._del_dir()
-        if not os.path.isdir(d) or not any(
-            f.endswith(".parquet") for f in os.listdir(d)
-        ):
+        files = self.deletion_files()
+        if not files:
             return None
-        return self.spark.read.parquet(d).select("doc_num").distinct()
+        return self.spark.read.parquet(*files).select("doc_num").distinct()
 
     def delete_docs(self, keys_df: DataFrame,
                     key_cols: list[str]) -> int:
@@ -1221,14 +1224,11 @@ class SegmentStore:
              if f.startswith("epoch-") and f.endswith(".json")),
             default=-1,
         ) + 1
-        ddir = self._del_dir()
-        del_files = sorted(
-            f for f in os.listdir(ddir) if f.endswith(".parquet")
-        ) if os.path.isdir(ddir) else []
         snap = {
             "epoch": epoch,
             "segments": [m["segment_id"] for m in self.manifests()],
-            "delete_files": del_files,
+            "delete_files": [
+                os.path.basename(f) for f in self.deletion_files()],
         }
         path = os.path.join(sdir, f"epoch-{epoch}.json")
         tmp = path + ".tmp"
@@ -1301,6 +1301,75 @@ class SegmentStore:
             with open(os.path.join(mdir, fn)) as f:
                 out.append(json.load(f))
         return out
+
+    def fingerprint(self) -> tuple:
+        """What this store serves: (root, manifest stamp, served
+        segment set, delete files). Every commit, merge output, delete
+        and update changes it, so caches keyed on it never serve a
+        superseded state; an epoch view differs from its parent by the
+        served set. File-system listings only — no Spark job."""
+        try:
+            stamp = self.manifest_stamp()
+        except OSError:
+            stamp = (-1, 0.0)
+        segs = frozenset(self._segs) if self._segs is not None else None
+        return (self.root, stamp, segs, tuple(self.deletion_files()))
+
+    def read_live_postings(self, key_cols: list[str]):
+        """The served segments' postings, read on the driver with
+        pyarrow and decoded by :func:`decode_chunk_batch` — no Spark
+        job. Returns ``(postings, docs, doc_freq)`` Arrow tables:
+
+        * ``postings`` — (field, term, doc_num, tf, norm, positions) of
+          the live docs (deleted docs' postings are dropped);
+        * ``docs`` — (doc_num, key columns...) of the live docs;
+        * ``doc_freq`` — (field, term, df): Σ n_docs of the chunk rows,
+          deleted docs included — the at-rest df the Spark block-max
+          plan scores with.
+
+        Norms come from the len_blob streams, so every served manifest
+        must carry ``posting_lens``."""
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        blob_cols = ["field", "term", "n_docs", "doc_blob", "tf_blob",
+                     "pos_blob", "len_blob"]
+        chunks, parts, docs = [], [], []
+        for m in self.manifests():
+            seg = int(m["segment_id"])
+            pdir, ddir, _ = _seg_paths(self.root, seg)
+            # merged segments carry their id in the directory name only
+            t = pq.read_table(pdir, columns=blob_cols)
+            t = t.append_column("segment_id", pa.array(
+                np.full(t.num_rows, seg, dtype=np.int32)))
+            batches = t.combine_chunks().to_batches() or [
+                pa.RecordBatch.from_pylist([], schema=t.schema)]
+            for b in batches:
+                parts.append(_postings_batch(
+                    b, *decode_chunk_batch(b, True, True)))
+            chunks.append(t.select(["field", "term", "n_docs"]))
+            docs.append(pq.read_table(ddir, columns=["doc_num", *key_cols]))
+        docs = pa.concat_tables(docs, promote_options="permissive")
+        dels = [pq.read_table(f, columns=["doc_num"]).column("doc_num")
+                .to_numpy() for f in self.deletion_files()]
+        if dels:
+            dead = np.concatenate(dels)
+            docs = docs.filter(pa.array(~np.isin(
+                docs.column("doc_num").to_numpy(), dead)))
+        postings = pa.concat_tables(
+            [pa.Table.from_batches([b]) for b in parts],
+            promote_options="permissive")
+        # the Spark plans' inner join with the live doc table
+        postings = postings.filter(pa.array(np.isin(
+            postings.column("doc_num").to_numpy(),
+            docs.column("doc_num").to_numpy())))
+        doc_freq = (
+            pa.concat_tables(chunks, promote_options="permissive")
+            .group_by(["field", "term"]).aggregate([("n_docs", "sum")])
+            .select(["field", "term", "n_docs_sum"])
+            .rename_columns(["field", "term", "df"])
+        )
+        return postings, docs, doc_freq
 
     # -- decode -------------------------------------------------------
     def decode(self, pred=None) -> DataFrame:
@@ -1530,17 +1599,9 @@ class _EpochView(SegmentStore):
                 df = df.join(dels, "doc_num", "left_anti")
         return df
 
-    def deletions(self) -> DataFrame | None:
-        files = [
-            os.path.join(self._del_dir(), f)
-            for f in self._snap["delete_files"]
-        ]
-        if not files:
-            return None
-        return (
-            self.spark.read.parquet(*files)
-            .select("doc_num").distinct()
-        )
+    def deletion_files(self) -> list[str]:
+        return [os.path.join(self._del_dir(), f)
+                for f in self._snap["delete_files"]]
 
     def manifests(self) -> list[dict]:
         return [

@@ -39,6 +39,7 @@ surviving chunks + interval-overlapping chunks of candidate docs.
 
 from __future__ import annotations
 
+import dataclasses
 import math
 
 import numpy as np
@@ -47,7 +48,9 @@ from pyspark.sql import DataFrame, functions as F
 from bleve_spark.index.build import IndexStats
 from bleve_spark.index.segments import PARETO_TF_CAP, SegmentStore
 from bleve_spark import config as _cfg
+from bleve_spark.search import resident
 from bleve_spark.search.scorer import BM25_B, BM25_K1, idf_value
+from bleve_spark.search.searcher import SDisj, STerm
 from bleve_spark.session import local_frame
 
 # candidate-span compaction: the surviving chunks' [min_doc, max_doc]
@@ -81,25 +84,6 @@ BROADCAST_DOCS_MAX = 2_000_000
 # Spark jobs. Bounded FIFO.
 _META_CACHE: dict = {}
 _META_CACHE_MAX = 128
-
-
-def _store_fingerprint(store: SegmentStore):
-    # the SERVED segment set must be part of the key: an _EpochView
-    # shares its parent's root/manifest dir while restricting
-    # chunk_rows to a snapshot subset — without it, view and
-    # full-store queries over the same (field, terms) collide and the
-    # pruned rescore can silently drop docs (r6 ADVICE). The name
-    # tuple hash (manifest_stamp) also disambiguates same-second
-    # in-place rewrites that fool a (count, mtime) pair. Listing goes
-    # through SegmentStore.manifest_stamp — the one lister an
-    # object-store deployment swaps.
-    segs = getattr(store, "_segs", None)
-    seg_key = frozenset(segs) if segs is not None else None
-    try:
-        nh, mt = store.manifest_stamp()
-        return (store.root, nh, mt, seg_key)
-    except OSError:
-        return (store.root, -1, 0.0, seg_key)
 
 
 def _score_expr(idf: float, avg_len: float, tf_col, norm_col):
@@ -169,6 +153,22 @@ def _coalesce_intervals(
     return [(int(a), int(b)) for a, b in zip(lo, hi)]
 
 
+def _resident_topk(spark, snap, stats: IndexStats, field: str,
+                   terms: list[str], k: int) -> DataFrame:
+    """The plan's answer scored on a store snapshot: ``SDisj([STerm…],
+    min=1)`` through the resident evaluator, with the plan's
+    statistics — BM25 idf from ``stats`` over the at-rest df, and
+    queryNorm over every query term."""
+    dfs = snap.doc_freq.get(field, {})
+    node = SDisj([STerm(field, t, 1.0, dfs.get(t, 0)) for t in terms],
+                 min=1)
+    idfs = [idf_value("bm25", stats.doc_count, c.doc_freq,
+                      stats.avg_len(field)) for c in node.children]
+    qn = 1.0 / math.sqrt(sum(i ** 2 for i in idfs))
+    bm25 = dataclasses.replace(stats, scoring="bm25")
+    return resident.hits_for(snap, bm25, node, qn).frame(spark, k)
+
+
 def pruned_disjunction_topk(
     store: SegmentStore,
     stats: IndexStats,
@@ -182,12 +182,19 @@ def pruned_disjunction_topk(
     all terms, min=1, root queryNorm) — rank-identical to the unpruned
     plan (asserted in tests).
 
+    A store within the resident bound is answered on the driver from
+    its segment files (:func:`resident.store_snapshot`), with no Spark
+    job; bigger and legacy stores take the block-max plan below.
+
     Returns a small materialized DataFrame (≤ k rows): the internal
     decode caches are unpersisted before returning, so repeated calls
     in a long-lived driver don't accumulate cached blocks."""
     from bleve_spark.index.segments import decode_chunk_rows
 
     spark = store.spark
+    snap = resident.store_snapshot(store, key_cols)
+    if snap is not None:
+        return _resident_topk(spark, snap, stats, field, terms, k)
     chunks = store.chunk_rows().where(
         (F.col("field") == field) & F.col("term").isin(terms)
     ).persist()
@@ -222,7 +229,7 @@ def pruned_disjunction_topk(
         if achieved_raw is not None:
             meta_cols.append(achieved_raw.alias("_a"))
         cache_key = (
-            _store_fingerprint(store), field, tuple(sorted(terms)),
+            store.fingerprint(), field, tuple(sorted(terms)),
         )
         head = _META_CACHE.get(cache_key)
         if head is None:

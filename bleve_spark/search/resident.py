@@ -1,4 +1,4 @@
-"""Driver-resident serving tier for small persisted indexes.
+"""Driver-resident serving tier for small indexes and segment stores.
 
 The reference answers a query in-process: a Searcher tree walks the
 resident segment postings (index_impl.go:877-881,
@@ -13,7 +13,19 @@ processing of columnar inverted indexes — then cut to the top-k on the
 driver and returned as a k-row Arrow-backed DataFrame. No Spark job
 runs per query.
 
-It engages only when all of these hold, each observable on the index:
+A snapshot has two sources, with one dataclass
+(:class:`PostingsSnapshot`) and one evaluator (:class:`_Eval`):
+
+1. a small persisted index (:func:`snapshot_for`, for
+   ``compile_query`` / ``search_df`` / ``search``), collected once by
+   the first query;
+2. a small segment store (:func:`store_snapshot`, for
+   ``blockmax.pruned_disjunction_topk``), read straight from the
+   segment parquet files on the driver with pyarrow and the store's
+   chunk decoder — no Spark job at all.
+
+An index snapshot engages only when all of these hold, each observable
+on the index:
 
 * the postings were built persisted (``index_table``,
   ``to_indexed_table(persist=True)`` or ``IndexedTable.persist()``);
@@ -31,11 +43,24 @@ tables and aliases.
 
 The snapshot is keyed on the postings relation: ``dataclasses.replace``
 copies share it, a view with filtered postings (``apply_index_update``)
-builds its own. Collection statistics (idf inputs, avg_len) are NOT in
-the snapshot — they are read from ``idx.stats`` at query time, so a
-copy with merged alias stats scores with those. Scores are the exact
-``term_score_col`` / composite arithmetic (same IEEE op order), ties
-break on ascending key order like the Spark plan's ORDER BY.
+builds its own.
+
+A store snapshot engages when Σ manifest ``postings`` of the served
+segments ≤ :data:`RESIDENT_MAX_POSTINGS` and every served manifest has
+``posting_lens`` (norms ride in the postings); the decision reads the
+manifests only. It holds the live docs' postings and the at-rest df
+(Σ chunk ``n_docs``, deleted docs included) the block-max plan scores
+with, and is keyed on ``SegmentStore.fingerprint()`` — root, manifest
+stamp, served segment set and delete files — so an epoch view serves
+its own segments and a delete or update is seen by the next call.
+Bigger and legacy stores stay on the block-max Spark plan.
+
+Collection statistics (idf inputs, avg_len) are NOT in a snapshot —
+the caller passes an ``IndexStats`` per query (``idx.stats``, or the
+block-max caller's stats), so a copy with merged alias stats scores
+with those. Scores are the exact ``term_score_col`` / composite
+arithmetic (same IEEE op order), ties break on ascending key order
+like the Spark plan's ORDER BY.
 """
 
 from __future__ import annotations
@@ -48,9 +73,10 @@ import numpy as np
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
+from pyspark.sql.pandas.types import from_arrow_type
 from pyspark.sql.types import DoubleType, StructField, StructType
 
-from bleve_spark.search.scorer import BM25_B, BM25_K1
+from bleve_spark.search.scorer import BM25_B, BM25_K1, idf_value
 from bleve_spark.search.searcher import (
     SBool,
     SConj,
@@ -62,8 +88,8 @@ from bleve_spark.search.searcher import (
 )
 from bleve_spark.session import local_frame
 
-# Σ doc_freq (= postings rows) above which an index stays on the Spark
-# plan. A posting costs ~20 B resident (doc, tf, norm, position
+# Σ doc_freq (= postings rows) above which an index or a segment store
+# stays on the Spark plan. A posting costs ~20 B resident (doc, tf, norm, position
 # offset) plus 4 B per position; the one-time collect holds the
 # postings' key and term strings on top, so 1M postings is tens of MB
 # on the driver.
@@ -88,6 +114,9 @@ class PostingsSnapshot:
     norm: np.ndarray               # float32
     pos_off: np.ndarray            # int64, len(doc) + 1
     pos: np.ndarray                # int64 positions, flat
+    # field -> term -> at-rest df, deleted docs included (store
+    # snapshots only; an index's df comes from its dictionary)
+    doc_freq: dict | None = None
 
     @property
     def nbytes(self) -> int:
@@ -104,34 +133,22 @@ class PostingsSnapshot:
         return np.repeat(self.doc[s:e], counts), self.pos[lo:hi]
 
 
-def build_snapshot(postings: DataFrame, key_cols: list[str]
-                   ) -> PostingsSnapshot:
-    """Collect ``postings`` once (one Arrow collect) into a snapshot."""
-    cols = ["field", "term", *key_cols, "tf", "norm", "positions"]
-    sel = postings.select(*[f"`{c}`" for c in cols])
-    key_fields = [sel.schema[k] for k in key_cols]
-    t = sel.toArrow().combine_chunks()
-    n = t.num_rows
-
-    # dense doc index in ascending key order (Spark's asc = nulls first)
-    kt = t.select(key_cols)
-    order = pc.sort_indices(
-        kt, sort_keys=[(k, "ascending") for k in key_cols],
+def _key_order(kt: pa.Table) -> np.ndarray:
+    """Row order of key table ``kt`` ascending (Spark's asc = nulls
+    first)."""
+    return pc.sort_indices(
+        kt, sort_keys=[(k, "ascending") for k in kt.column_names],
         null_placement="at_start",
     ).to_numpy()
-    sk = kt.take(order)
-    new = np.zeros(n, dtype=bool)
-    if n:
-        new[0] = True
-        for k in key_cols:
-            v = sk.column(k).to_numpy(zero_copy_only=False)
-            new[1:] |= v[1:] != v[:-1]
-    dense = np.cumsum(new) - 1
-    doc = np.empty(n, dtype=np.int64)
-    doc[order] = dense
-    keys = sk.filter(pa.array(new))
 
-    # group postings by (field, term), doc-ascending within a group
+
+def _assemble(t: pa.Table, doc: np.ndarray, keys: pa.Table,
+              schema: StructType, doc_freq: dict | None = None
+              ) -> PostingsSnapshot:
+    """Postings ``t`` (field, term, tf, norm, positions), with dense
+    doc index ``doc`` per row, grouped into the per-(field, term) CSR
+    layout."""
+    n = t.num_rows
     fenc = pc.dictionary_encode(t.column("field")).combine_chunks()
     tenc = pc.dictionary_encode(t.column("term")).combine_chunks()
     fcode = fenc.indices.to_numpy().astype(np.int64)
@@ -152,15 +169,66 @@ def build_snapshot(postings: DataFrame, key_cols: list[str]
     lens = pc.fill_null(pc.list_value_length(plist), 0).to_numpy()
     return PostingsSnapshot(
         keys=keys,
-        schema=StructType(
-            key_fields + [StructField("score", DoubleType(), True)]),
+        schema=schema,
         spans=spans,
         doc=doc[perm],
         tf=t.column("tf").to_numpy().astype(np.int32)[perm],
         norm=t.column("norm").to_numpy().astype(np.float32)[perm],
         pos_off=np.concatenate(([0], np.cumsum(lens))).astype(np.int64),
         pos=pc.list_flatten(plist).to_numpy().astype(np.int64),
+        doc_freq=doc_freq,
     )
+
+
+def build_snapshot(postings: DataFrame, key_cols: list[str]
+                   ) -> PostingsSnapshot:
+    """Collect ``postings`` once (one Arrow collect) into a snapshot."""
+    cols = ["field", "term", *key_cols, "tf", "norm", "positions"]
+    sel = postings.select(*[f"`{c}`" for c in cols])
+    key_fields = [sel.schema[k] for k in key_cols]
+    t = sel.toArrow().combine_chunks()
+    n = t.num_rows
+
+    # dense doc index in ascending key order; equal keys are one doc
+    kt = t.select(key_cols)
+    order = _key_order(kt)
+    sk = kt.take(order)
+    new = np.zeros(n, dtype=bool)
+    if n:
+        new[0] = True
+        for k in key_cols:
+            v = sk.column(k).to_numpy(zero_copy_only=False)
+            new[1:] |= v[1:] != v[:-1]
+    doc = np.empty(n, dtype=np.int64)
+    doc[order] = np.cumsum(new) - 1
+    schema = StructType(
+        key_fields + [StructField("score", DoubleType(), True)])
+    return _assemble(t, doc, sk.filter(pa.array(new)), schema)
+
+
+def read_store_snapshot(store, key_cols: list[str]) -> PostingsSnapshot:
+    """A snapshot of a segment store's served segments, read straight
+    from its parquet files on the driver
+    (:meth:`SegmentStore.read_live_postings`) — no Spark job. Docs are
+    numbered per doc_num (the unit the Spark plans group on) in
+    ascending key order; ``doc_freq`` holds the at-rest df."""
+    postings, docs, df = store.read_live_postings(key_cols)
+    order = _key_order(docs.select(key_cols))
+    keys = docs.select(key_cols).take(order)
+    nums = docs.column("doc_num").to_numpy()[order]
+    by_num = np.argsort(nums)
+    at = np.searchsorted(nums, postings.column("doc_num").to_numpy(),
+                         sorter=by_num)
+    doc_freq: dict = {}
+    for f, t, n in zip(*(df.column(c).to_pylist()
+                         for c in ("field", "term", "df"))):
+        doc_freq.setdefault(f, {})[t] = int(n)
+    schema = StructType(
+        [StructField(k, from_arrow_type(keys.schema.field(k).type), True)
+         for k in key_cols]
+        + [StructField("score", DoubleType(), True)])
+    return _assemble(postings, by_num[at].astype(np.int64), keys, schema,
+                     doc_freq)
 
 
 # postings relation -> snapshot, or None when it is too big
@@ -192,6 +260,42 @@ def snapshot_for(idx) -> PostingsSnapshot | None:
                 snap = build_snapshot(postings, idx.key_cols)
             _SNAPSHOTS[postings] = snap
         return _SNAPSHOTS[postings]
+
+
+# (store fingerprint, key columns) -> (Σ manifest postings, snapshot);
+# FIFO-bounded, so commits beside reads keep few superseded snapshots
+_STORE_SNAPSHOTS: dict = {}
+_STORE_SNAPSHOTS_MAX = 4
+
+
+def store_snapshot(store, key_cols: list[str]) -> PostingsSnapshot | None:
+    """The snapshot of what ``store`` serves, read on first use; None
+    when the served segments hold more than
+    :data:`RESIDENT_MAX_POSTINGS` postings (manifest counts) or a
+    served manifest lacks ``posting_lens`` (legacy stores keep norms
+    in the doc table). Decided from the manifests alone, with no Spark
+    call; keyed on :meth:`SegmentStore.fingerprint`, so an epoch view
+    serves its own segments and a delete or update is seen by the
+    next call."""
+    key = (store.fingerprint(), tuple(key_cols))
+    hit = _STORE_SNAPSHOTS.get(key)
+    if hit is not None:
+        total, snap = hit
+        return snap if total <= RESIDENT_MAX_POSTINGS else None
+    ms = store.manifests()
+    total = sum(m["postings"] for m in ms)
+    if (not ms or not all(m.get("posting_lens") for m in ms)
+            or total > RESIDENT_MAX_POSTINGS):
+        return None
+    with _LOCK:
+        if key not in _STORE_SNAPSHOTS:
+            snap = read_store_snapshot(store, key_cols)
+            if store.fingerprint() != key[0]:
+                return snap  # committed meanwhile: serve, don't cache
+            if len(_STORE_SNAPSHOTS) >= _STORE_SNAPSHOTS_MAX:
+                _STORE_SNAPSHOTS.pop(next(iter(_STORE_SNAPSHOTS)))
+            _STORE_SNAPSHOTS[key] = (total, snap)
+        return _STORE_SNAPSHOTS[key][1]
 
 
 # ----------------------------------------------------------- evaluation --
@@ -259,8 +363,15 @@ def evaluate(idx, node, ctx) -> Hits | None:
     snap = snapshot_for(idx)
     if snap is None:
         return None
-    doc, score = _Eval(snap, ctx).run(node)
-    return Hits(snap, doc, score)
+    return hits_for(snap, ctx.idx.stats, node, ctx.qn)
+
+
+def hits_for(snap: PostingsSnapshot, stats, node, qn: float) -> Hits:
+    """Every match of resolved tree ``node`` on ``snap``, scored with
+    collection statistics ``stats`` (:class:`IndexStats`) and root
+    queryNorm ``qn``."""
+    doc, s = _Eval(snap, stats, qn).run(node)
+    return Hits(snap, doc, s)
 
 
 _EMPTY = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
@@ -278,8 +389,8 @@ def _group(docs: list, scores: list):
 
 
 class _Eval:
-    def __init__(self, snap: PostingsSnapshot, ctx):
-        self.snap, self.ctx = snap, ctx
+    def __init__(self, snap: PostingsSnapshot, stats, qn: float):
+        self.snap, self.stats, self.qn = snap, stats, qn
 
     def run(self, node):
         return getattr(self, "_" + type(node).__name__)(node)
@@ -293,14 +404,14 @@ class _Eval:
 
     def _term_score(self, t: STerm, s: int, e: int) -> np.ndarray:
         """term_score_col over postings ``s:e``, op for op."""
-        ctx = self.ctx
-        idf = t._idf(ctx)
-        qw = t._boost() * idf * ctx.qn if ctx.qn != 1.0 else 1.0
-        avg = (ctx.idx.stats.avg_len(t.field)
-               if ctx.scoring == "bm25" else 0.0)
+        stats, qn = self.stats, self.qn
+        avg = (stats.avg_len(t.field)
+               if stats.scoring == "bm25" else 0.0)
+        idf = idf_value(stats.scoring, stats.doc_count, t.doc_freq, avg)
+        qw = t._boost() * idf * qn if qn != 1.0 else 1.0
         tf = np.sqrt(self.snap.tf[s:e].astype(np.float64))
         norm = self.snap.norm[s:e].astype(np.float64)
-        if ctx.scoring == "bm25" and avg > 0:
+        if stats.scoring == "bm25" and avg > 0:
             fl = 1.0 / (norm * norm)
             score = idf * (tf * BM25_K1) / (
                 tf + BM25_K1 * ((1.0 - BM25_B) + (BM25_B * fl) / avg))

@@ -1150,27 +1150,18 @@ class Compiler:
             raise ValueError(f"fuzziness {d} > max {MAX_FUZZINESS}")
         if d == 0:
             return self._terms(field, [term], boost)
-        pred = F.levenshtein(F.col("term"), F.lit(term)) <= d
-
-        def py_pred(t, term=term, d=d):
-            # edit distance ≥ length difference: skip the O(n²) DP
-            if abs(len(t) - len(term)) > d:
-                return False
-            return _levenshtein(term, t) <= d
-
-        tf = self.idx.expand_terms(
-            field, pred, with_freq=True, py_pred=py_pred
-        )
-        if tf is None:
-            tf = sorted(
-                (r["term"], int(r["doc_freq"]))
+        matches = self.idx.fuzzy_terms(field, term, d)
+        if matches is None:
+            pred = F.levenshtein(F.col("term"), F.lit(term)) <= d
+            matches = sorted(
+                (r["term"], int(r["doc_freq"]),
+                 _levenshtein(term, r["term"]))
                 for r in self.idx.expand_terms_df(field, pred).collect()
             )
-        _check_clauses(field, len(tf))
+        _check_clauses(field, len(matches))
         return [
-            STerm(field, t, boost, n,
-                  boost_multiplier=1.0 / (_levenshtein(term, t) + 1.0))
-            for t, n in tf
+            STerm(field, t, boost, n, boost_multiplier=1.0 / (dist + 1.0))
+            for t, n, dist in matches
         ]
 
     def _r_MatchPhraseQuery(self, q: Q.MatchPhraseQuery) -> SNode:
@@ -1256,30 +1247,32 @@ class Compiler:
         py_pred,
         boost: float,
         mult_col=None,
-        py_mult=None,
+        matches=None,
     ) -> SNode:
         """Dictionary-expansion disjunction with two physical paths:
 
         * cached dictionary resident → driver-side expansion to STerm
-          children (zero extra jobs; the r01-verified plan);
+          children (zero extra jobs; the r01-verified plan) — by
+          ``py_pred``, or the caller's resident ``matches``
+          ((term, doc_freq, mult) triples);
         * otherwise → :class:`SDictDisj`, a fully distributed
           dictionary→postings join with the tooManyClauses guard on a
           1-row count (never collects the expansion).
         Both paths produce identical scores (min=0 disjunction, coord,
         per-term mult)."""
-        tf = self.idx.expand_terms(
-            field, pred, with_freq=True, py_pred=py_pred
-        )
-        if tf is not None:
-            _check_clauses(field, len(tf))
-            if not tf:
+        if matches is None:
+            tf = self.idx.expand_terms(
+                field, pred, with_freq=True, py_pred=py_pred
+            )
+            if tf is not None:
+                matches = [(t, n, 1.0) for t, n in tf]
+        if matches is not None:
+            _check_clauses(field, len(matches))
+            if not matches:
                 return SNone()
             children = [
-                STerm(
-                    field, t, boost, n,
-                    boost_multiplier=(py_mult(t) if py_mult else 1.0),
-                )
-                for t, n in tf
+                STerm(field, t, boost, n, boost_multiplier=mult)
+                for t, n, mult in matches
             ]
             return SDisj(children, min=0)
         exp = self.idx.expand_terms_df(field, pred).withColumn(
@@ -1299,25 +1292,20 @@ class Compiler:
             raise ValueError(f"fuzziness {d} > max {MAX_FUZZINESS}")
         if d == 0:
             return self._terms(field, [term], boost)[0]
+        # edit-distance boost 1/(1+d) (search_fuzzy.go:45-48)
+        matches = self.idx.fuzzy_terms(field, term, d, term[:prefix_len])
+        if matches is not None:
+            return self._expansion_node(
+                field, None, None, boost, matches=[
+                    (t, n, 1.0 / (dist + 1.0)) for t, n, dist in matches])
         pred = F.levenshtein(F.col("term"), F.lit(term)) <= d
         if prefix_len > 0:
             pred = pred & F.col("term").startswith(term[:prefix_len])
-        px = term[:prefix_len]
-
-        def py_pred(t, term=term, d=d, px=px):
-            if px and not t.startswith(px):
-                return False
-            if abs(len(t) - len(term)) > d:
-                return False
-            return _levenshtein(term, t) <= d
-
-        # edit-distance boost 1/(1+d) (search_fuzzy.go:45-48)
         return self._expansion_node(
-            field, pred, py_pred, boost,
+            field, pred, None, boost,
             mult_col=F.lit(1.0)
             / (F.levenshtein(F.col("term"), F.lit(term)).cast("double")
                + F.lit(1.0)),
-            py_mult=lambda t, term=term: 1.0 / (_levenshtein(term, t) + 1.0),
         )
 
     def _r_FuzzyQuery(self, q: Q.FuzzyQuery) -> SNode:

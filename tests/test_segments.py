@@ -28,6 +28,18 @@ def seg_root(spark, transcripts, tmp_path_factory):
     return root
 
 
+@pytest.fixture(params=["resident", "plan"])
+def topk_tier(request, monkeypatch):
+    """The tier that answers pruned_disjunction_topk on these small
+    stores: the driver snapshot of the segment files, or the Spark
+    block-max plan (pinned by a zero resident bound)."""
+    from bleve_spark.search import resident
+
+    if request.param == "plan":
+        monkeypatch.setattr(resident, "RESIDENT_MAX_POSTINGS", 0)
+    return request.param
+
+
 def _postings_set(df, keys):
     rows = df.collect()
     return {
@@ -230,7 +242,8 @@ def test_merge_round_issues_constant_jobs(spark, transcripts, tmp_path):
     assert counts[8] <= 8, counts
 
 
-def test_blockmax_pruned_equals_naive(spark, transcripts, seg_root):
+def test_blockmax_pruned_equals_naive(spark, transcripts, seg_root,
+                                      topk_tier):
     from bleve_spark.search.blockmax import pruned_disjunction_topk
     from bleve_spark.search.searcher import compile_query
 
@@ -263,7 +276,7 @@ def test_blockmax_pruned_equals_naive(spark, transcripts, seg_root):
 
 
 def test_blockmax_distributed_fallback_equals_naive(
-    spark, transcripts, seg_root, monkeypatch
+    spark, transcripts, seg_root, monkeypatch, topk_tier
 ):
     """The >META_COLLECT_MAX path (distributed aggregation instead of
     the driver-side planning collect) produces the same ranking — the
@@ -477,7 +490,7 @@ def test_merge_wide_single_round_equals_rounds(
             assert len(a) > 0
 
 
-def test_blockmax_pareto_overflow_bucket(spark, tmp_path):
+def test_blockmax_pareto_overflow_bucket(spark, tmp_path, topk_tier):
     """tf > PARETO_TF_CAP lands in the overflow bucket: its bound
     stays an upper bound and its achieved-θ contribution stays a
     lower bound (score at tf=CAP), so pruning remains rank-identical

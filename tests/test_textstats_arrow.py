@@ -27,6 +27,7 @@ EDGE_DOCS = [
     (13, "x"),
     (14, "the " * 10),                    # high stopword ratio
     (15, "ab AB Ab aB"),                  # case folding collapse
+    (16, None),                           # null text: null stats
 ]
 
 
