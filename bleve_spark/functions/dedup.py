@@ -244,14 +244,14 @@ def _bucket_pairs(rows: DataFrame, bucket_cols: list[str],
     aggregation: collect each bucket's (bounded) member list, drop
     buckets above ``max_bucket_df`` (same count semantics as
     :func:`_cap_hot_buckets` — the size of the collected list IS the
-    bucket's row count), and explode the a<b member combinations with
-    native array ops. Replaces the {hot-count aggregate + anti-join +
-    bucket self-join} plan: one exchange of the banded rows instead of
-    four, and each banded row crosses the shuffle once instead of
-    twice (both self-join sides). The emitted pair volume is unchanged
-    — capped buckets stay ≤ cap²/2 pairs, and with no cap the
-    collected list is exactly the key group the self-join would have
-    materialized per reducer anyway.
+    bucket's row count), and explode the a<b member combinations in
+    two levels: ``posexplode`` the sorted list into one row per member,
+    then each member row explodes only the ``slice`` of later members.
+    A row holds O(m) values, never the m²/2 pairs of a hot bucket as
+    one array (Spark caps a single value at 2 GB). Replaces the
+    {hot-count aggregate + anti-join + bucket self-join} plan: one
+    exchange of the banded rows instead of four, and each banded row
+    crosses the shuffle once instead of twice (both self-join sides).
 
     ``payload`` is a struct column (first field the ordering key);
     struct-array sort_array orders by it, so ``_a < _b`` holds
@@ -262,22 +262,11 @@ def _bucket_pairs(rows: DataFrame, bucket_cols: list[str],
     )
     if max_bucket_df is not None:
         grouped = grouped.where(F.size("_ks") <= int(max_bucket_df))
-    grouped = grouped.where(F.size("_ks") >= 2)
-    pairs = F.flatten(
-        F.transform(
-            F.sequence(F.lit(0), F.size("_ks") - 2),
-            lambda i: F.transform(
-                F.slice(F.col("_ks"), i + 2, F.size("_ks")),
-                lambda b: F.struct(
-                    F.element_at(F.col("_ks"), i + 1).alias("_a"),
-                    b.alias("_b"),
-                ),
-            ),
-        )
-    )
-    return grouped.select(F.explode(pairs).alias("_p")).select(
-        F.col("_p._a").alias("_a"), F.col("_p._b").alias("_b")
-    )
+    members = grouped.where(F.size("_ks") >= 2).select(
+        "_ks", F.posexplode("_ks").alias("_i", "_a"))
+    later = F.slice("_ks", F.col("_i") + 2,
+                    F.size("_ks") - F.col("_i") - 1)
+    return members.select("_a", F.explode(later).alias("_b"))
 
 
 def minhash_lsh_pairs(

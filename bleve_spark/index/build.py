@@ -34,6 +34,7 @@ from __future__ import annotations
 
 import math
 import os
+from bisect import bisect_left
 from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import DataFrame, functions as F
@@ -102,8 +103,9 @@ class IndexedTable:
     _persisted: list = dc_field(default_factory=list)
     # driver-side dictionary cache: None = not tried, False = too big
     _dict_map: object = dc_field(default=None, repr=False)
-    # (the _dict_map it was built from, field -> FuzzyDict)
-    _fuzzy: tuple | None = dc_field(default=None, repr=False)
+    # (the _dict_map they were built from, (kind, field) -> per-field
+    # lookup structure: FuzzyDict or sorted (term, doc_freq) items)
+    _dict_views: tuple | None = dc_field(default=None, repr=False)
     # per-(field, term) memo of bounded thesaurus lookups
     _syn_cache: dict | None = dc_field(default=None, repr=False)
     # per-index override of DICT_CACHE_MAX (0 forces every dictionary
@@ -291,6 +293,20 @@ class IndexedTable:
             return items
         return [t for t, _ in items]
 
+    def _dict_view(self, kind: str, field_name: str, build):
+        """``build(term → doc_freq)`` of one field of the resident
+        dictionary, memoized until the dictionary object changes;
+        ``None`` when the dictionary is not resident."""
+        cache = self._cached_dict()
+        if cache is None:
+            return None
+        if self._dict_views is None or self._dict_views[0] is not cache:
+            self._dict_views = (cache, {})
+        views = self._dict_views[1]
+        if (kind, field_name) not in views:
+            views[kind, field_name] = build(cache.get(field_name, {}))
+        return views[kind, field_name]
+
     def fuzzy_terms(self, field_name: str, term: str, d: int,
                     prefix: str = "") -> list | None:
         """(term, doc_freq, edit distance) of every dictionary term of
@@ -301,15 +317,26 @@ class IndexedTable:
         take the distributed :meth:`expand_terms_df` path)."""
         from bleve_spark.index.fuzzy import FuzzyDict
 
-        cache = self._cached_dict()
-        if cache is None:
+        fd = self._dict_view("fuzzy", field_name, FuzzyDict)
+        return None if fd is None else fd.match(term, d, prefix)
+
+    def prefix_terms(self, field_name: str, prefix: str) -> list | None:
+        """(term, doc_freq) of every dictionary term of ``field_name``
+        that starts with ``prefix``, sorted by term — a binary-search
+        range of the field's code-point-sorted resident terms, rebuilt
+        whenever the dictionary is. ``None`` when the dictionary is not
+        resident (callers then take :meth:`expand_terms_df`)."""
+        view = self._dict_view("sorted", field_name, _sorted_terms)
+        if view is None:
             return None
-        if self._fuzzy is None or self._fuzzy[0] is not cache:
-            self._fuzzy = (cache, {})
-        by_field = self._fuzzy[1]
-        if field_name not in by_field:
-            by_field[field_name] = FuzzyDict(cache.get(field_name, {}))
-        return by_field[field_name].match(term, d, prefix)
+        terms, items = view
+        lo = bisect_left(terms, prefix)
+        # the least string above every extension of the prefix: drop
+        # trailing U+10FFFF, then bump the last code point
+        end = prefix.rstrip("\U0010ffff")
+        hi = (bisect_left(terms, end[:-1] + chr(ord(end[-1]) + 1), lo)
+              if end else len(terms))
+        return items[lo:hi]
 
     def expand_terms_df(self, field_name: str, predicate) -> DataFrame:
         """Distributed dictionary expansion: (term, doc_freq) rows whose
@@ -331,6 +358,12 @@ class IndexedTable:
         for df in self._persisted:
             df.unpersist()
         self._persisted = []
+
+
+def _sorted_terms(doc_freq: dict[str, int]) -> tuple[list, list]:
+    """(terms, (term, doc_freq) items), both in code-point order."""
+    items = sorted(doc_freq.items())
+    return [t for t, _ in items], items
 
 
 def _field_postings(

@@ -186,9 +186,10 @@ def pruned_disjunction_topk(
     its segment files (:func:`resident.store_snapshot`), with no Spark
     job; bigger and legacy stores take the block-max plan below.
 
-    Returns a small materialized DataFrame (≤ k rows): the internal
-    decode caches are unpersisted before returning, so repeated calls
-    in a long-lived driver don't accumulate cached blocks."""
+    Returns a driver-local frame (``session.LocalFrame``) of ≤ k rows:
+    the internal decode caches are unpersisted before returning, so
+    repeated calls in a long-lived driver don't accumulate cached
+    blocks, and collecting the answer starts no Spark job."""
     from bleve_spark.index.segments import decode_chunk_rows
 
     spark = store.spark
@@ -513,9 +514,10 @@ def pruned_disjunction_topk(
             F.col(c).asc() for c in key_cols
         ]
         topk = result.orderBy(*order).limit(k)
-        # materialize (≤ k rows) so every cache this call created can
-        # be released before returning — a lazy return would leak the
-        # persisted decode across queries in a long-lived driver
+        # collect (≤ k rows) so every cache this call created can be
+        # released before returning — a lazy return would leak the
+        # persisted decode across queries in a long-lived driver; the
+        # rows stay on the driver until a JVM operation needs them
         return local_frame(spark, topk.toArrow(), topk.schema)
     finally:
         chunks.unpersist()

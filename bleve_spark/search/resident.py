@@ -10,8 +10,11 @@ the driver: the postings are collected ONCE into per-(field, term) CSR
 arrays (dense doc index, tf, float32 norm, positions), and a resolved
 SNode tree is scored with numpy — the vectorized, columnar query
 processing of columnar inverted indexes — then cut to the top-k on the
-driver and returned as a k-row Arrow-backed DataFrame. No Spark job
-runs per query.
+driver. The answer is a :class:`~bleve_spark.session.LocalFrame` that
+holds the ``Hits`` and the selected rows: collecting it reads them from
+numpy and Arrow on the driver, with no Spark job and no py4j call; only
+a JVM operation on it (a join, a non-score sort, persist) ships it to
+the JVM as a LocalRelation.
 
 A snapshot has two sources, with one dataclass
 (:class:`PostingsSnapshot`) and one evaluator (:class:`_Eval`):
@@ -86,7 +89,7 @@ from bleve_spark.search.searcher import (
     STerm,
     _find_phrase_path,
 )
-from bleve_spark.session import local_frame
+from bleve_spark.session import LocalFrame
 
 # Σ doc_freq (= postings rows) above which an index or a segment store
 # stays on the Spark plan. A posting costs ~20 B resident (doc, tf, norm, position
@@ -338,21 +341,24 @@ class Hits:
         order = np.lexsort((doc[cand], -score[cand]))
         return cand[order[:n]]
 
-    def frame(self, spark, n: int | None = None) -> DataFrame:
+    def table(self, rows: np.ndarray | None = None) -> pa.Table:
+        """(keys..., score) of hit positions ``rows`` (all by default)."""
+        if rows is None:
+            rows = np.arange(len(self.doc))
+        tab = self.snap.keys.take(pa.array(self.doc[rows]))
+        return tab.append_column("score", pa.array(self.score[rows]))
+
+    def frame(self, spark, n: int | None = None) -> LocalFrame:
         """(keys..., score) rows — all matches in key order, or the
-        top ``n`` in rank order — as an Arrow-backed local DataFrame.
-        The frame carries this object so :func:`hits_of` finds it."""
-        sel = np.arange(len(self.doc)) if n is None else self.top(n)
-        tab = self.snap.keys.take(pa.array(self.doc[sel]))
-        tab = tab.append_column("score", pa.array(self.score[sel]))
-        out = local_frame(spark, tab, self.snap.schema)
-        out._resident_hits = self
-        return out
+        top ``n`` in rank order — as a driver-local frame whose
+        ``hits`` field is this object."""
+        return LocalFrame(spark, self.snap.schema, hits=self,
+                          rows=None if n is None else self.top(n))
 
 
 def hits_of(df: DataFrame | None) -> Hits | None:
     """The resident answer behind a frame from :func:`Hits.frame`."""
-    return vars(df).get("_resident_hits") if df is not None else None
+    return df.hits if isinstance(df, LocalFrame) else None
 
 
 def evaluate(idx, node, ctx) -> Hits | None:

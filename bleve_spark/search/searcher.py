@@ -1315,10 +1315,12 @@ class Compiler:
 
     def _r_PrefixQuery(self, q: Q.PrefixQuery) -> SNode:
         f = self._field(q)
+        matches = self.idx.prefix_terms(f, q.prefix)
+        if matches is not None:
+            return self._expansion_node(f, None, None, q.boost, matches=[
+                (t, n, 1.0) for t, n in matches])
         return self._expansion_node(
-            f, F.col("term").startswith(q.prefix),
-            lambda t, p=q.prefix: t.startswith(p), q.boost,
-        )
+            f, F.col("term").startswith(q.prefix), None, q.boost)
 
     def _r_RegexpQuery(self, q: Q.RegexpQuery) -> SNode:
         f = self._field(q)
@@ -1786,7 +1788,8 @@ def _resolve(idx: IndexedTable, q: Q.Query | dict) -> tuple[SNode, _Ctx]:
 def compile_query(idx: IndexedTable, q: Q.Query | dict) -> DataFrame:
     """Query → DataFrame(keys..., score). On a small persisted index
     the query is scored on the driver (search.resident) and the frame
-    is an Arrow-backed local relation of every match."""
+    is a driver-local frame of every match (``session.LocalFrame``),
+    built into a JVM relation only if a JVM operation needs it."""
     from bleve_spark.search import resident
 
     node, ctx = _resolve(idx, q)
@@ -1845,8 +1848,9 @@ def search_df(
     postings scan between the page and the true-total count.
 
     A score-sorted page of a query answered on the driver
-    (search.resident) is cut there too: the result is a local frame of
-    ``from_ + size`` rows and no Spark job runs."""
+    (search.resident) is cut there too: the result is a driver-local
+    frame of ``from_ + size`` rows, and collecting it starts no Spark
+    job and makes no py4j call."""
     from bleve_spark.search import resident
 
     if precompiled is not None:

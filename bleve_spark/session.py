@@ -3,9 +3,17 @@
 from __future__ import annotations
 
 import os
+import threading
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import _parse_datatype_string
+import pyarrow as pa
+from pyspark.sql import SparkSession
+from pyspark.sql.classic.dataframe import DataFrame
+from pyspark.sql.conversion import ArrowTableToRowsConversion
+from pyspark.sql.pandas.types import (
+    _check_arrow_table_timestamps_localize,
+    to_arrow_schema,
+)
+from pyspark.sql.types import StructType, _parse_datatype_string
 
 # Allocator settings for the Python workers (inherited via the JVM's
 # environment, so they must be set before the gateway starts). Measured
@@ -83,18 +91,115 @@ def get_spark(
     )
 
 
-def local_frame(spark: SparkSession, data, schema) -> DataFrame:
-    """A small DataFrame held in the plan itself: ``data`` (a
-    ``pyarrow.Table`` or a dict of column → values) goes to the JVM as
-    Arrow and becomes a LocalRelation. Collecting, joining or
-    broadcasting it starts no Python worker and no Spark job — unlike
-    ``createDataFrame(<list>)``, whose rows are parallelized through
-    Python workers. ``schema`` is a StructType or a DDL string; the
-    data's columns must come in its order."""
-    import pyarrow as pa
+class LocalFrame(DataFrame):
+    """A small DataFrame that stays on the driver until Spark needs it.
 
+    It holds its rows as an Arrow table — for a resident answer, the
+    ``hits`` (:class:`bleve_spark.search.resident.Hits`) and a row
+    selection, turned into a table on first read. Until then
+    ``collect``, ``count``, ``toArrow``/``toPandas``, ``schema`` and
+    ``columns`` answer from that table, with no JVM relation and no
+    Spark job. The first access to ``_jdf`` — which every JVM
+    operation makes (select, join, ``F.broadcast``, persist,
+    mapInArrow, ``queryExecution``) — ships the table to the JVM once,
+    under a lock, through ``createDataFrame(table, schema)``; from
+    then on the frame is an ordinary DataFrame."""
+
+    # the classic __new__ runs __init__(jdf, session): there is no jdf
+    # yet, so construction goes straight to the __init__ below
+    def __new__(cls, *args, **kwargs):
+        return object.__new__(cls)
+
+    def __init__(self, spark: SparkSession, schema: StructType,
+                 table: pa.Table | None = None, *, hits=None, rows=None):
+        self._session = spark
+        self._sc = spark._sc
+        self.is_cached = False
+        self._support_repr_html = False
+        self.schema = schema
+        self.hits = hits
+        self._rows = rows
+        self._table = table
+        self._relation = None
+        self._lock = threading.RLock()
+
+    @property
+    def table(self) -> pa.Table:
+        """The rows, as given (a resident answer's: built on first
+        read)."""
+        if self._table is None:
+            with self._lock:
+                if self._table is None:
+                    self._table = self.hits.table(self._rows)
+        return self._table
+
+    @property
+    def materialized(self) -> bool:
+        """Whether the JVM relation has been built."""
+        return self._relation is not None
+
+    @property
+    def _jdf(self):
+        if self._relation is None:
+            with self._lock:
+                if self._relation is None:
+                    self._relation = self._session.createDataFrame(
+                        self.table, self.schema)._jdf
+        return self._relation
+
+    def _arrow(self) -> pa.Table:
+        """The rows as the JVM relation holds them: cast to the
+        schema's Arrow types, naive timestamps read in the session
+        time zone (as ``createDataFrame`` does)."""
+        t = self.table
+        if any(pa.types.is_nested(f.type) or pa.types.is_timestamp(f.type)
+               for f in t.schema):
+            t = _check_arrow_table_timestamps_localize(
+                t, self.schema, True,
+                self._session._jconf.sessionLocalTimeZone())
+        return t.cast(to_arrow_schema(
+            self.schema, error_on_duplicated_field_names_in_struct=True))
+
+    def collect(self):
+        if self._relation is None:
+            return ArrowTableToRowsConversion.convert(self._arrow(),
+                                                      self.schema)
+        return super().collect()
+
+    def count(self) -> int:
+        if self._relation is None:
+            return self.table.num_rows
+        return super().count()
+
+    def _collect_as_arrow(self, split_batches: bool = False,
+                          empty_list_if_zero_records: bool = True):
+        # toArrow / toPandas read their batches here
+        if self._relation is not None:
+            return super()._collect_as_arrow(split_batches,
+                                             empty_list_if_zero_records)
+        t = self._arrow()
+        if t.num_rows:
+            return t.to_batches()
+        if empty_list_if_zero_records:
+            return []
+        return [pa.RecordBatch.from_pylist([], schema=t.schema)]
+
+    def unpersist(self, blocking: bool = False) -> DataFrame:
+        if self._relation is None:
+            return self
+        return super().unpersist(blocking)
+
+
+def local_frame(spark: SparkSession, data, schema) -> LocalFrame:
+    """A small DataFrame held on the driver (:class:`LocalFrame`):
+    ``data`` is a ``pyarrow.Table`` or a dict of column → values, in
+    the column order of ``schema`` (a StructType or a DDL string).
+    Reading it back starts nothing; a JVM operation on it makes it a
+    LocalRelation, so collecting, joining or broadcasting it starts no
+    Python worker and no Spark job — unlike ``createDataFrame(<list>)``,
+    whose rows are parallelized through Python workers."""
     if isinstance(schema, str):
         schema = _parse_datatype_string(schema)
     if not isinstance(data, pa.Table):
         data = pa.table({f.name: data[f.name] for f in schema.fields})
-    return spark.createDataFrame(data, schema)
+    return LocalFrame(spark, schema, data)

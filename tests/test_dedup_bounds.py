@@ -139,3 +139,31 @@ def test_connected_components_raises_on_nonconvergence(spark):
         connected_components(chain, max_iter=2)
     ok = connected_components(chain, max_iter=25)
     assert ok.select(F.countDistinct("component")).first()[0] == 1
+
+
+@pytest.mark.parametrize("cap", [None, 5])
+def test_bucket_pairs_equal_brute_force(spark, cap):
+    """_bucket_pairs emits exactly the a<b member pairs of every bucket
+    within the cap, for buckets of 0, 1, 2, 5 and 60 members; the
+    payload is a struct led by the key, as in simhash_pairs."""
+    import itertools
+
+    from bleve_spark.functions.dedup import _bucket_pairs
+
+    sizes = {"b1": 1, "b2": 2, "b5": 5, "b60": 60}
+    rows = [(b, (i * 37 + len(b)) % 101, i)
+            for b, m in sizes.items() for i in range(m)]
+    schema = "bucket string, key long, tag long"
+    for data in (rows, []):
+        df = spark.createDataFrame(data, schema)
+        got = _bucket_pairs(df, ["bucket"], F.struct("key", "tag"), cap)
+        got = sorted((r["_a"]["key"], r["_a"]["tag"],
+                      r["_b"]["key"], r["_b"]["tag"])
+                     for r in got.collect())
+        want = []
+        for b, m in sizes.items():
+            members = sorted((k, t) for bb, k, t in data if bb == b)
+            if cap is None or len(members) <= cap:
+                want += [a + c for a, c in
+                         itertools.combinations(members, 2)]
+        assert got == sorted(want)
