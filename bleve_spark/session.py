@@ -96,14 +96,17 @@ class LocalFrame(DataFrame):
 
     It holds its rows as an Arrow table — for a resident answer, the
     ``hits`` (:class:`bleve_spark.search.resident.Hits`) and a row
-    selection, turned into a table on first read. Until then
-    ``collect``, ``count``, ``toArrow``/``toPandas``, ``schema`` and
-    ``columns`` answer from that table, with no JVM relation and no
-    Spark job. The first access to ``_jdf`` — which every JVM
-    operation makes (select, join, ``F.broadcast``, persist,
-    mapInArrow, ``queryExecution``) — ships the table to the JVM once,
-    under a lock, through ``createDataFrame(table, schema)``; from
-    then on the frame is an ordinary DataFrame."""
+    selection, turned into a table on first read. ``collect``,
+    ``count``, ``toArrow``/``toPandas``, ``schema`` and ``columns``
+    always answer from that table, with no Spark job: the JVM relation
+    holds the same immutable rows. The first access to ``_jdf`` —
+    which every JVM operation makes (select, join, ``F.broadcast``,
+    persist, mapInArrow, ``queryExecution``) — ships the table to the
+    JVM once, under a lock, through ``createDataFrame(table, schema)``.
+
+    Both lazy properties turn an ``AttributeError`` raised while they
+    build into a ``RuntimeError``: the classic ``__getattr__`` would
+    otherwise report it as a missing column attribute."""
 
     # the classic __new__ runs __init__(jdf, session): there is no jdf
     # yet, so construction goes straight to the __init__ below
@@ -130,7 +133,12 @@ class LocalFrame(DataFrame):
         if self._table is None:
             with self._lock:
                 if self._table is None:
-                    self._table = self.hits.table(self._rows)
+                    try:
+                        self._table = self.hits.table(self._rows)
+                    except AttributeError as e:
+                        raise RuntimeError(
+                            f"building the rows of a LocalFrame: {e}"
+                        ) from e
         return self._table
 
     @property
@@ -143,8 +151,13 @@ class LocalFrame(DataFrame):
         if self._relation is None:
             with self._lock:
                 if self._relation is None:
-                    self._relation = self._session.createDataFrame(
-                        self.table, self.schema)._jdf
+                    try:
+                        self._relation = self._session.createDataFrame(
+                            self.table, self.schema)._jdf
+                    except AttributeError as e:
+                        raise RuntimeError(
+                            f"building the JVM relation of a LocalFrame: {e}"
+                        ) from e
         return self._relation
 
     def _arrow(self) -> pa.Table:
@@ -161,22 +174,14 @@ class LocalFrame(DataFrame):
             self.schema, error_on_duplicated_field_names_in_struct=True))
 
     def collect(self):
-        if self._relation is None:
-            return ArrowTableToRowsConversion.convert(self._arrow(),
-                                                      self.schema)
-        return super().collect()
+        return ArrowTableToRowsConversion.convert(self._arrow(), self.schema)
 
     def count(self) -> int:
-        if self._relation is None:
-            return self.table.num_rows
-        return super().count()
+        return self.table.num_rows
 
     def _collect_as_arrow(self, split_batches: bool = False,
                           empty_list_if_zero_records: bool = True):
         # toArrow / toPandas read their batches here
-        if self._relation is not None:
-            return super()._collect_as_arrow(split_batches,
-                                             empty_list_if_zero_records)
         t = self._arrow()
         if t.num_rows:
             return t.to_batches()

@@ -15,6 +15,7 @@ import threading
 import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.classic.dataframe import DataFrame
 from pyspark.sql.types import (
     DateType,
     DoubleType,
@@ -94,6 +95,40 @@ def test_dict_data_and_ddl_schema(spark):
     eager = spark.createDataFrame(lf.table, lf.schema)
     assert lf.collect() == eager.collect()
     assert lf.schema == eager.schema
+
+
+def test_local_frame_sets_every_field_of_an_eager_frame(spark):
+    """LocalFrame.__init__ stands in for the classic one: a field a
+    pyspark upgrade adds there must show up here, not as a missing
+    attribute deep in a JVM operation. (The reference frame comes from
+    the classic constructor itself: ``createDataFrame`` also stores a
+    ``_schema`` that nothing in classic pyspark reads.)"""
+    lf = local_frame(spark, _table(), SCHEMA)
+    eager = DataFrame(spark.range(1)._jdf, spark)
+    missing = [k for k in vars(eager)
+               if k not in vars(lf) and k not in vars(LocalFrame)]
+    assert missing == []
+
+
+def test_build_errors_are_not_read_as_column_attributes(spark,
+                                                        monkeypatch):
+    class BrokenHits:
+        def table(self, rows):
+            raise AttributeError("no postings")
+
+    lf = LocalFrame(spark, SCHEMA, hits=BrokenHits(), rows=[0])
+    with pytest.raises(RuntimeError, match="no postings") as err:
+        lf.collect()
+    assert isinstance(err.value.__cause__, AttributeError)
+
+    def broken(*args, **kwargs):
+        raise AttributeError("no relation")
+
+    lf = local_frame(spark, _table(), SCHEMA)
+    monkeypatch.setattr(spark, "createDataFrame", broken)
+    with pytest.raises(RuntimeError, match="no relation") as err:
+        lf.select("s")
+    assert isinstance(err.value.__cause__, AttributeError)
 
 
 def test_jvm_operations_equal_the_eager_frame(spark, session_tz):
@@ -235,6 +270,13 @@ def test_resident_call_sequence_sends_no_py4j_command(spark, tindex, store,
     assert rows == want
     assert all(hits_of(f) is not None for f in frames)
     assert not any(f.materialized for f in frames)
+    # a frame that has become a JVM relation still reads from the driver
+    page = frames[1]
+    page._jdf
+    with _Py4jCounter(spark) as sent:
+        again = (page.collect(), page.count())
+    assert sent.commands == []
+    assert again == (rows[0], len(rows[0]))
     # the answers are real: a term query finds its postings
     assert len(rows[0]) == min(10, len(toracle.postings["text"][a]))
     assert all(not math.isnan(r["score"]) for r in rows[0])
