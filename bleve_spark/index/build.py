@@ -28,6 +28,11 @@ Design notes for 100 TB scale:
   offline like bleve's Builder, which merges down to a SINGLE segment
   (/root/reference/index/scorch/builder.go:169-236), so cardinality =
   global distinct terms per field.
+
+An input small enough to collect is the other size class: it is
+analysed once on the driver and served from there
+(:func:`_index_on_driver`), with the same postings, dictionary and
+stats as the plan.
 """
 
 from __future__ import annotations
@@ -36,7 +41,9 @@ import math
 import os
 from bisect import bisect_left
 from dataclasses import dataclass, field as dc_field
+from typing import NamedTuple
 
+import numpy as np
 from pyspark.sql import DataFrame, functions as F
 
 BM25_K1 = 1.2  # /root/reference/search/util.go:275
@@ -187,11 +194,11 @@ class IndexedTable:
         return int(env) if env else self.DICT_CACHE_MAX
 
     def _cached_dict(self):
+        cmax = self._cache_max()
+        if cmax <= 0:  # also over a dictionary the build filled in
+            self._dict_map = False
+            return None
         if self._dict_map is None:
-            cmax = self._cache_max()
-            if cmax <= 0:
-                self._dict_map = False
-                return None
             rows = (
                 self.dictionary.select("field", "term", "doc_freq")
                 .limit(cmax + 1)
@@ -364,6 +371,35 @@ def _sorted_terms(doc_freq: dict[str, int]) -> tuple[list, list]:
     """(terms, (term, doc_freq) items), both in code-point order."""
     items = sorted(doc_freq.items())
     return [t for t, _ in items], items
+
+
+class TokenGroups(NamedTuple):
+    """(term, doc) posting groups, term-major and doc-ascending: group
+    ``i`` holds the ``tf[i]`` ascending positions
+    ``pos[offsets[i]:offsets[i + 1]]``."""
+
+    term: np.ndarray     # term code per group
+    doc: np.ndarray      # doc per group
+    tf: np.ndarray       # int64
+    offsets: np.ndarray  # int64, one more than the groups
+    pos: np.ndarray      # positions, group by group
+
+
+def group_tokens(codes: np.ndarray, doc: np.ndarray,
+                 pos: np.ndarray) -> TokenGroups:
+    """Group a flat token stream (term code, doc, position per token)
+    into (term, doc) postings: one lexsort, then group boundaries where
+    the term or the doc changes. The one grouping kernel of the
+    segment encoder and of the driver build."""
+    order = np.lexsort((pos, doc, codes))
+    c, d, p = codes[order], doc[order], pos[order]
+    n = len(c)
+    new = np.ones(n, dtype=bool)
+    new[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
+    starts = np.flatnonzero(new)
+    offsets = np.append(starts, n)
+    return TokenGroups(c[starts], d[starts],
+                       np.diff(offsets).astype(np.int64), offsets, p)
 
 
 def _field_postings(
@@ -818,6 +854,153 @@ def _composite_postings(
     return merged
 
 
+# Postings per byte of the plan's size estimate that the driver build's
+# gate assumes: the estimate of an input past
+# resident.RESIDENT_MAX_POSTINGS / this (2 MB) sends it to the plan
+# without a collect. Rounded up from the transcript corpus, where a
+# parquet source (estimate = compressed file bytes, scaled to the
+# selected columns) gave 0.39-0.41 postings per byte from 800 to
+# 100,000 turns and a local relation (estimate = rows x default row
+# width) 0.42. A generated frame (mapInPandas over spark.range) is
+# estimated from its generator's input, far below its output, so it
+# passes and the postings check after analysis, the backstop, decides.
+POSTINGS_PER_ESTIMATED_BYTE = 0.5
+
+
+def _index_on_driver(
+    df: DataFrame, key_cols: list[str], fields: dict[str, str],
+    scoring: str, synonyms: dict | None,
+) -> IndexedTable | None:
+    """The small size class of :func:`index_table`: the index built
+    once on the driver, or None when ``df`` does not qualify.
+
+    The key and field columns come back in one Arrow collect, the only
+    Spark job. Each field is analysed with the batch analyzer and
+    grouped by :func:`group_tokens` into the plan's postings rows
+    (same norm arithmetic, float32 bit for bit). The postings and the
+    dictionary are driver-held frames
+    (:class:`~bleve_spark.session.LocalFrame`); the stats, the driver
+    dictionary and the resident snapshot are filled from the same
+    arrays — no shuffle, no cache, no re-collect on the first query.
+
+    ``df`` qualifies when every field is a string column, the plan's
+    size estimate of the selected columns predicts at most
+    ``resident.RESIDENT_MAX_POSTINGS`` postings (at
+    :data:`POSTINGS_PER_ESTIMATED_BYTE`; checked before the collect),
+    the keys identify the rows (the plan makes same-key rows one doc)
+    and the analysed postings do number at most that bound."""
+    import pyarrow as pa
+    from pyspark.sql import types as T
+
+    from bleve_spark.analysis.analyzers import get_analyzer
+    from bleve_spark.search import resident
+    from bleve_spark.session import local_frame
+
+    cols = list(dict.fromkeys([*key_cols, *fields]))
+    types = {f.name: f for f in df.schema.fields}
+    if not fields or any(c not in types for c in cols) or not all(
+            isinstance(types[f].dataType, T.StringType) for f in fields):
+        return None
+    spark = df.sparkSession
+    sel = df.select(*[qcol(c) for c in cols])
+    size = sel._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    if size * POSTINGS_PER_ESTIMATED_BYTE > resident.RESIDENT_MAX_POSTINGS:
+        return None
+
+    t = sel.toArrow()
+    n = t.num_rows
+    kt = t.select(key_cols)
+    if kt.group_by(key_cols).aggregate([]).num_rows != n:
+        return None
+    # dense doc numbers in ascending key order: the tie-break order
+    order = resident.key_order(kt)
+    keys = kt.take(order)
+    doc_of_row = np.empty(n, dtype=np.int64)
+    doc_of_row[order] = np.arange(n)
+
+    posting_parts, dict_parts, docs = [], [], []
+    dict_map: dict = {}
+    total = 0
+    for f, a in fields.items():
+        flens, rows, codes, vocab, pos = get_analyzer(a).analyze_batch(
+            t.column(f).to_pylist())
+        g = group_tokens(codes, doc_of_row[rows], pos)
+        G = len(g.tf)
+        if total + G > resident.RESIDENT_MAX_POSTINGS:
+            return None
+        flen = np.empty(n, dtype=np.int64)
+        flen[doc_of_row] = flens
+        # float32(1/√len), the plan's double arithmetic then cast
+        norm = (1.0 / np.sqrt(flen[g.doc])).astype(np.float32)
+        first = np.flatnonzero(np.diff(g.term, prepend=-1))  # per term
+        terms = pa.array(vocab, pa.string())
+        fcol = pa.array([f], pa.string())
+        at = keys.take(pa.array(g.doc))
+        posting_parts.append(pa.table({
+            "field": fcol.take(np.zeros(G, dtype=np.int32)),
+            "term": terms.take(pa.array(g.term)),
+            **{k: at.column(k) for k in key_cols},
+            "tf": pa.array(g.tf.astype(np.int32)),
+            "positions": pa.ListArray.from_arrays(
+                pa.array(g.offsets.astype(np.int32)),
+                pa.array(g.pos.astype(np.int32))),
+            "norm": pa.array(norm),
+        }))
+        doc_freq = np.diff(np.append(first, G))
+        dict_parts.append(pa.table({
+            "field": fcol.take(np.zeros(len(first), dtype=np.int32)),
+            "term": terms.take(pa.array(g.term[first])),
+            "doc_freq": pa.array(doc_freq.astype(np.int64)),
+            "max_tf": pa.array(
+                np.maximum.reduceat(g.tf, first).astype(np.int32)),
+            "min_norm": pa.array(np.minimum.reduceat(norm, first)),
+        }))
+        if G:
+            dict_map[f] = dict(zip(vocab[g.term[first]].tolist(),
+                                   doc_freq.tolist()))
+        docs.append(g.doc)
+        total += G
+
+    key_fields = [types[k] for k in key_cols]
+    table = pa.concat_tables(posting_parts)
+    postings = local_frame(
+        spark, table, T.StructType([
+            T.StructField("field", T.StringType()),
+            T.StructField("term", T.StringType()),
+            *key_fields,
+            T.StructField("tf", T.IntegerType()),
+            T.StructField("positions", T.ArrayType(T.IntegerType())),
+            T.StructField("norm", T.FloatType()),
+        ]))
+    dictionary = local_frame(
+        spark, pa.concat_tables(dict_parts),
+        "field string, term string, doc_freq bigint, max_tf int, "
+        "min_norm float")
+    card = {f: len(terms) for f, terms in dict_map.items()}
+    idx = IndexedTable(
+        source=df,
+        postings=postings,
+        key_cols=list(key_cols),
+        field_analyzers=dict(fields),
+        stats=IndexStats(
+            doc_count=n,
+            field_cardinality=card,
+            avg_doc_len={f: math.ceil(c / n) for f, c in card.items()},
+            scoring=scoring,
+        ),
+        dictionary=dictionary,
+        synonyms=synonyms,
+        composite_fields={},
+        _persisted=[postings, dictionary],
+    )
+    if sum(card.values()) <= idx._cache_max():
+        idx._dict_map = dict_map
+    resident.register_snapshot(postings, resident.assemble(
+        table, np.concatenate(docs), keys, T.StructType(
+            key_fields + [T.StructField("score", T.DoubleType())])))
+    return idx
+
+
 def index_table(
     df: DataFrame,
     key_cols: list[str],
@@ -839,7 +1022,38 @@ def index_table(
     columns need no postings — range queries compile to native predicates
     on ``df`` (Parquet min/max pruning replaces the reference's numeric
     trie, /root/reference/search/searcher/search_numeric_range.go:194).
+
+    A persisted index of a small input with only plain string fields —
+    no composite fields, thesaurus, synonym collections, extra
+    postings or nested documents (whose keys end in ``_nested_ctx``) —
+    is built on the driver (:func:`_index_on_driver`); every other
+    input runs the Spark plan (:func:`_index_on_plan`).
     """
+    if (persist and not (composite_fields or thesaurus
+                         or synonym_collections or extra_postings)
+            and "_nested_ctx" not in key_cols):
+        idx = _index_on_driver(df, key_cols, fields, scoring, synonyms)
+        if idx is not None:
+            return idx
+    return _index_on_plan(
+        df, key_cols, fields, scoring, persist, synonyms,
+        composite_fields, thesaurus, synonym_collections, extra_postings)
+
+
+def _index_on_plan(
+    df: DataFrame,
+    key_cols: list[str],
+    fields: dict[str, str],
+    scoring: str = "bm25",
+    persist: bool = True,
+    synonyms: dict | None = None,
+    composite_fields: dict[str, list[str]] | None = None,
+    thesaurus: DataFrame | None = None,
+    synonym_collections: dict | None = None,
+    extra_postings: list | None = None,
+) -> IndexedTable:
+    """The Spark plan of :func:`index_table`, for every input outside
+    the driver size class (same arguments)."""
     # composite fields (the reference's `_all`): per-member analysis
     # with each member's own analyzer, merged term freqs, member-LOCAL
     # positions (restart per member — phrases never span members),

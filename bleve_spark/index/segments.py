@@ -48,7 +48,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from bleve_spark.analysis.analyzers import get_analyzer
-from bleve_spark.index.build import IndexedTable, IndexStats
+from bleve_spark.index.build import IndexedTable, IndexStats, group_tokens
 from bleve_spark.index.varint import (
     decode_positions,
     delta_decode_sorted,
@@ -160,20 +160,14 @@ def _build_one_segment(
         ).astype(np.float32)
 
         # ---- (term, doc) posting groups over the sorted token stream
-        order = np.lexsort((pos, doc_idx, codes))
-        c = codes[order]
-        d = doc_idx[order]
-        p = pos[order]
-        N = len(c)
-
-        gch = np.empty(N, dtype=bool)
-        gch[0] = True
-        gch[1:] = (c[1:] != c[:-1]) | (d[1:] != d[:-1])
-        gs = np.flatnonzero(gch)                 # group start (token idx)
+        grp = group_tokens(codes, doc_idx, pos)
+        p = grp.pos
+        N = len(p)
+        gs = grp.offsets[:-1]                    # group start (token idx)
         G = len(gs)
-        tf = np.diff(np.append(gs, N)).astype(np.int64)
-        g_c = c[gs]                              # per-group term code
-        g_d = d[gs]                              # per-group local doc
+        tf = grp.tf
+        g_c = grp.term                           # per-group term code
+        g_d = grp.doc                            # per-group local doc
         n_postings += G
 
         # ---- chunk layout: ≤chunk_docs docs per (term, chunk)
@@ -215,7 +209,7 @@ def _build_one_segment(
         pp = np.empty(N, dtype=np.int32)
         pp[1:] = p[1:] - p[:-1]
         pp[gs] = p[gs]
-        grp_id = np.cumsum(gch) - 1
+        grp_id = np.repeat(np.arange(G), tf)
         stream = np.empty(N + G, dtype=np.uint64)
         g_head = gs + np.arange(G)               # group head in stream
         stream[g_head] = tf.astype(np.uint64)

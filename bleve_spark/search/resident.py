@@ -21,7 +21,9 @@ A snapshot has two sources, with one dataclass
 
 1. a small persisted index (:func:`snapshot_for`, for
    ``compile_query`` / ``search_df`` / ``search``), collected once by
-   the first query;
+   the first query — or, for an index ``index_table`` built on the
+   driver, filled from its build arrays and registered by the build
+   (:func:`register_snapshot`);
 2. a small segment store (:func:`store_snapshot`, for
    ``blockmax.pruned_disjunction_topk``), read straight from the
    segment parquet files on the driver with pyarrow and the store's
@@ -136,7 +138,7 @@ class PostingsSnapshot:
         return np.repeat(self.doc[s:e], counts), self.pos[lo:hi]
 
 
-def _key_order(kt: pa.Table) -> np.ndarray:
+def key_order(kt: pa.Table) -> np.ndarray:
     """Row order of key table ``kt`` ascending (Spark's asc = nulls
     first)."""
     return pc.sort_indices(
@@ -145,9 +147,9 @@ def _key_order(kt: pa.Table) -> np.ndarray:
     ).to_numpy()
 
 
-def _assemble(t: pa.Table, doc: np.ndarray, keys: pa.Table,
-              schema: StructType, doc_freq: dict | None = None
-              ) -> PostingsSnapshot:
+def assemble(t: pa.Table, doc: np.ndarray, keys: pa.Table,
+             schema: StructType, doc_freq: dict | None = None
+             ) -> PostingsSnapshot:
     """Postings ``t`` (field, term, tf, norm, positions), with dense
     doc index ``doc`` per row, grouped into the per-(field, term) CSR
     layout."""
@@ -194,7 +196,7 @@ def build_snapshot(postings: DataFrame, key_cols: list[str]
 
     # dense doc index in ascending key order; equal keys are one doc
     kt = t.select(key_cols)
-    order = _key_order(kt)
+    order = key_order(kt)
     sk = kt.take(order)
     new = np.zeros(n, dtype=bool)
     if n:
@@ -206,7 +208,7 @@ def build_snapshot(postings: DataFrame, key_cols: list[str]
     doc[order] = np.cumsum(new) - 1
     schema = StructType(
         key_fields + [StructField("score", DoubleType(), True)])
-    return _assemble(t, doc, sk.filter(pa.array(new)), schema)
+    return assemble(t, doc, sk.filter(pa.array(new)), schema)
 
 
 def read_store_snapshot(store, key_cols: list[str]) -> PostingsSnapshot:
@@ -216,7 +218,7 @@ def read_store_snapshot(store, key_cols: list[str]) -> PostingsSnapshot:
     numbered per doc_num (the unit the Spark plans group on) in
     ascending key order; ``doc_freq`` holds the at-rest df."""
     postings, docs, df = store.read_live_postings(key_cols)
-    order = _key_order(docs.select(key_cols))
+    order = key_order(docs.select(key_cols))
     keys = docs.select(key_cols).take(order)
     nums = docs.column("doc_num").to_numpy()[order]
     by_num = np.argsort(nums)
@@ -230,13 +232,20 @@ def read_store_snapshot(store, key_cols: list[str]) -> PostingsSnapshot:
         [StructField(k, from_arrow_type(keys.schema.field(k).type), True)
          for k in key_cols]
         + [StructField("score", DoubleType(), True)])
-    return _assemble(postings, by_num[at].astype(np.int64), keys, schema,
+    return assemble(postings, by_num[at].astype(np.int64), keys, schema,
                      doc_freq)
 
 
 # postings relation -> snapshot, or None when it is too big
 _SNAPSHOTS: "weakref.WeakKeyDictionary" = weakref.WeakKeyDictionary()
 _LOCK = threading.Lock()
+
+
+def register_snapshot(postings: DataFrame, snap: PostingsSnapshot) -> None:
+    """Serve ``snap`` for the postings relation ``postings``: a
+    driver-built index hands over the snapshot of its build arrays."""
+    with _LOCK:
+        _SNAPSHOTS[postings] = snap
 
 
 def _postings_total(dict_map: dict) -> int:
